@@ -30,10 +30,9 @@ object Components {
     * action of fixed cost. 2M edges is ~32 MB of longs — broadcast-class
     * driver traffic, well under default driver memory — while a corpus
     * whose VERIFIED dup-pair graph exceeds it gets the distributed loop
-    * unchanged. Env-tunable for operators (GRAFT_CC_DRIVER_MAX_EDGES).
+    * unchanged.
     */
-  private[graft] val DriverCcMaxEdges: Long =
-    sys.env.getOrElse("GRAFT_CC_DRIVER_MAX_EDGES", "2000000").toLong
+  private[graft] val DriverCcMaxEdges: Long = 2000000L
 
   /** Min-label connected components over `pairs` (two long id columns,
     * undirected edges). Returns one row per node appearing in `pairs`,

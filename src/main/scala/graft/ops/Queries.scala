@@ -98,36 +98,28 @@ object Queries {
     // would silently invert the "no-op at any real corpus" guarantee
     // into an always-on full repartition at exactly the scales the
     // guard exists for. UNKNOWN size (probe failure) is treated as
-    // LARGE — never repartition a corpus we could not size.
+    // LARGE (the [[graft.Sizing]] rule).
     val len = try {
       val path = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")
       path.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getContentSummary(path).getLength
     } catch { case _: Exception => Long.MaxValue }
-    // ~4 MB openCost floor per scan task: below p tasks, cores sit idle
-    if (len < 4L * 1024 * 1024 * p) df.repartition(p, key) else df
+    if (graft.Sizing.isSmall(s, len)) df.repartition(p, key) else df
   }
 
   /** [[spread]] for frames whose source path isn't at hand (the
     * incremental-dedup engines receive an arbitrary batch DataFrame):
-    * sizes the input from the analyzed plan's statistics — for a parquet
-    * scan that is the file length from the already-built file index, a
-    * driver-side lookup, no job. UNKNOWN size (a LogicalRDD batch from
-    * the streaming drivers reports `defaultSizeInBytes` = Long.MaxValue)
-    * lands on the LARGE side: never repartition a corpus we could not
-    * size. Returns whether it spread, so callers can restore the
-    * pre-spread partition count before anything reaches a file writer
-    * (the r20 lesson: an explicit-N exchange into an extend fragments
-    * the index into ~cores files per append).
+    * sizes the input from the analyzed plan's statistics
+    * ([[graft.Sizing.isSmallPlan]]; a LogicalRDD batch from the streaming
+    * drivers is unknown-size, so LARGE). Returns whether it spread, so
+    * callers can restore the pre-spread partition count before anything
+    * reaches a file writer (the r20 lesson: an explicit-N exchange into
+    * an extend fragments the index into ~cores files per append).
     */
-  private def spreadByStats(df: DataFrame, key: Column): (DataFrame, Boolean) = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    val bytes =
-      try df.queryExecution.analyzed.stats.sizeInBytes
-      catch { case _: Exception => BigInt(Long.MaxValue) }
-    if (bytes < BigInt(4L * 1024 * 1024 * p)) (df.repartition(p, key), true)
+  private def spreadByStats(df: DataFrame, key: Column): (DataFrame, Boolean) =
+    if (graft.Sizing.isSmallPlan(df))
+      (df.repartition(df.sparkSession.sparkContext.defaultParallelism, key), true)
     else (df, false)
-  }
 
   /** events with timestamps surfaced as µs longs, whatever the physical
     * parquet type: ns-as-long (legacy generator + `nanosAsLong`),
@@ -1162,7 +1154,7 @@ object Queries {
       repo.getFullDf
     },
 
-    // ---- A12: dynamic partition overwrite ----------------------------
+    // ---- A12: partition overwrite (replaceGroups) ---------------------
     Q("q_partition_overwrite", Some(
       s"""SELECT $orderColsSql FROM orders WHERE o_orderkey % 2 = 0 AND o_orderstatus <> 'F'
          | UNION ALL

@@ -42,9 +42,10 @@ import org.apache.spark.sql.types._
   * existing data is rewritten with null backfill (core.py:405-421).
   *
   * Scale notes: all mutation paths are single Spark jobs over DataFrames —
-  * appends are plain file additions (no read-modify-write), upserts rewrite
-  * only affected partitions via dynamic partition overwrite, and reads are
-  * one partition-pruned, predicate-pushed Parquet scan. There is no
+  * appends are plain file additions (no read-modify-write), upserts and
+  * group replacements land new files for the affected partitions and then
+  * retire the old ones ([[landThenRetire]]), and reads are one
+  * partition-pruned, predicate-pushed Parquet scan. There is no
   * driver-side row materialization anywhere.
   */
 class TableRepo(
@@ -130,8 +131,8 @@ class TableRepo(
     * ~0.9 s of a 1.1 s write job on one core. One exchange keyed by the
     * layout cols caps it at one task per dir (the same co-location
     * rationale as [[routeToBuckets]]). Explicit-N so AQE cannot coalesce
-    * the tiny exchange back into one task. LARGE batches — plan
-    * statistics ≥ 4 MB × cores; UNKNOWN size counts as large — keep the
+    * the tiny exchange back into one task. LARGE batches — not
+    * [[graft.Sizing.isSmallPlan]]; UNKNOWN size counts as large — keep the
     * current shape, where every input task writes the dirs it touches:
     * collapsing a real append to one task per low-cardinality group
     * value would be the opposite trade (buckets route unconditionally
@@ -144,14 +145,9 @@ class TableRepo(
     // is partitioned, and the exchange is pure cost (measured +35% on
     // q_partition_prune before this guard)
     if (bucketColName.nonEmpty || layoutCols.isEmpty || maxRecordsPerFile <= 0) df
-    else {
-      val p = spark.sparkContext.defaultParallelism
-      val bytes =
-        try df.queryExecution.analyzed.stats.sizeInBytes
-        catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-      if (bytes < BigInt(4L * 1024 * 1024 * p)) df.repartition(p, layoutCols.map(col): _*)
-      else df
-    }
+    else if (graft.Sizing.isSmallPlan(df))
+      df.repartition(spark.sparkContext.defaultParallelism, layoutCols.map(col): _*)
+    else df
 
   /** Cluster rows at rest so Parquet row-group/file min-max statistics
     * become selective — the lakehouse data-skipping lever (zorder-lite).
@@ -218,12 +214,12 @@ class TableRepo(
   //     heartbeat is stale (sweepExpiredClaims, at every later commit):
   //     commit and expiry are two atomic renames of the same claim file,
   //     so exactly one wins and a reclaimed dir can never be blessed. In-place
-  //     writes (append, dynamic partition overwrite) re-resolve the
-  //     current version after the job and FAIL LOUDLY if a concurrent
-  //     external rewrite superseded their target mid-write, instead of
-  //     silently losing the rows at the next GC; a write JOB failed by
-  //     that same race (the superseded target GC'd mid-job) is converted
-  //     to the same typed retryable failure (inPlaceWrite). CONTENT-PRESERVING
+  //     writes (appends, group replacements, partition and file-pruned
+  //     upserts) run their job in a private staging dir, land the files by
+  //     rename and re-resolve the current version afterwards
+  //     ([[landThenRetire]]): if a concurrent external rewrite superseded
+  //     their target, they end in a PROVEN carry or FAIL LOUDLY with a typed
+  //     ConcurrentModificationException, never silent loss. CONTENT-PRESERVING
   //     rewrites (compact, schema backfill) are additionally
   //     source-guarded: their content plan lists AFTER the version
   //     claim, a re-list before the commit marker aborts-and-retries
@@ -455,7 +451,7 @@ class TableRepo(
         // itself superseded proves its rows were carried by comparing the
         // old dir's listing against this set — without it, a carried
         // append would falsely report "rows lost, retry" and the
-        // documented blind retry would DUPLICATE the rows (inPlaceWrite).
+        // documented blind retry would DUPLICATE the rows.
         val out = fs.create(new Path(s"$target/_GRAFT_CARRIED"), true)
         try out.write(preFiles._1.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
         finally out.close()
@@ -902,8 +898,8 @@ class TableRepo(
     // committer algorithm v2: task commit renames files straight into the
     // job's output dir instead of a second job-commit rename pass — one
     // fewer rename (and permission shell-out) per file. Visibility
-    // semantics are the REPO's, not the committer's: appends land from a
-    // private staging dir file-by-file and full rewrites only become
+    // semantics are the REPO's, not the committer's: in-place writes land
+    // from a private staging dir file-by-file and full rewrites only become
     // readable at the _GRAFT_COMMIT marker, so v2's
     // partial-files-on-job-failure window is invisible either way
     // (staging leftovers are vacuumed; uncommitted version dirs are GC'd).
@@ -914,54 +910,33 @@ class TableRepo(
     w
   }
 
-  /** Write harmonized data. `overwrite` uses a staging dir + swap so the
-    * input plan may read from this repo (Spark refuses to overwrite a path
-    * it is reading). Dynamic variant rewrites only partitions present in
-    * `df` (the reference's `replace_groups`, core.py:153-155).
+  /** Write harmonized data: an append lands through [[landThenRetire]]
+    * (retiring nothing); `overwrite` commits a full replacement as a new
+    * snapshot version, so the input plan may freely read the current one
+    * (different paths — no "cannot overwrite a path being read from").
     */
-  private def writeData(dfIn: => DataFrame, overwrite: Boolean, dynamic: Boolean = false,
-      alreadyStaged: Boolean = false, guardSource: Boolean = false): Unit = {
-    // `dfIn` is BY-NAME and `df` a def: for guarded snapshot rewrites the
-    // plan (and its parquet file listing) must be constructed INSIDE
-    // commitNewVersion's callback — after the version claim — or the
-    // source-guard re-list could not vouch for it (each branch below
-    // references `df` exactly once, so nothing is built twice)
-    def df = clustered(routeToGroups(routeToBuckets(withLayout(dfIn))))
-    if (!overwrite) {
-      appendExact(df)
-    } else if (dynamic && layoutCols.nonEmpty) {
-      val mark = stagedMark
-      val staged = if (alreadyStaged) df else stage(df)
-      val target = dataPath
-      try inPlaceWrite(target, "dynamic partition overwrite") {
-        configuredWriter(staged, "overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .parquet(target)
-      } finally releaseStagedFrom(mark)
-    } else {
-      // snapshot swap: the replacement lands in a fresh version dir, so
-      // the input plan may freely read the current one (different paths —
-      // no "cannot overwrite a path being read from", no staging copy)
-      commitNewVersion({ target =>
-        // same committer-v2 option as configuredWriter (see there): the
-        // version dir is invisible until its _GRAFT_COMMIT marker lands
-        var w = df.write.mode("overwrite")
-          .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        if (layoutCols.nonEmpty) w = w.partitionBy(layoutCols: _*)
-        if (maxRecordsPerFile > 0) w = w.option("maxRecordsPerFile", maxRecordsPerFile)
-        w.parquet(target)
-      }, guardSource = guardSource)
-    }
-  }
+  private def writeData(dfIn: => DataFrame, overwrite: Boolean,
+      guardSource: Boolean = false): Unit =
+    if (!overwrite) landThenRetire(dfIn, "append")((_, _) => Nil)
+    // `dfIn` is BY-NAME: for guarded snapshot rewrites the plan (and its
+    // parquet file listing) must be constructed INSIDE commitNewVersion's
+    // callback — after the version claim — or the source-guard re-list
+    // could not vouch for it
+    else commitNewVersion(target => configuredWriter(prepared(dfIn), "overwrite").parquet(target),
+      guardSource = guardSource)
 
-  /** Materialize a merge plan, breaking lineage against this repo's files
-    * so a subsequent overwrite of them is legal (Spark's analysis-time
-    * "cannot overwrite a path being read from" check). `localCheckpoint`
-    * pins the rows in executor block storage — cheaper than a parquet
-    * staging round-trip, and the merge-scoped data is bounded by the
-    * affected partitions, not the table.
+  /** The write-side shape of every data write: derived layout columns,
+    * bucket and group routing, clustering.
     */
-  // staged merge frames are localCheckpoint blocks; ContextCleaner only
+  private def prepared(df: DataFrame): DataFrame =
+    clustered(routeToGroups(routeToBuckets(withLayout(df))))
+
+  /** Materialize a frame several consumers read (the upsert's update set
+    * and affected-partition set, the pruned merge): `localCheckpoint`
+    * pins the rows in executor block storage, bounded by the update batch
+    * and the affected partitions, not the table.
+    */
+  // staged frames are localCheckpoint blocks; ContextCleaner only
   // reclaims them on driver GC, so a long-running driver doing many
   // upserts slowly accumulates executor storage. Every stage() records
   // the checkpointed RDD (all staging happens under the write monitor);
@@ -988,40 +963,42 @@ class TableRepo(
     stagedRdds.dropRightInPlace(stagedRdds.length - mark): Unit
   }
 
-  /** Land an append through a PRIVATE staging dir + per-file renames, so
-    * the batch carries EXACT file identity into the superseded-append
-    * verdict ([[verifyAppendVisibilityExact]]) — the same landing shape
-    * `extendExactlyOnce` uses, without the ledger. vs the former direct
-    * in-place job:
-    *  - the write job can no longer be failed by a concurrent external
-    *    rewrite GC'ing the target mid-job (the job writes under
-    *    `_graft_staging/_append-<uuid>`, which nothing touches while
-    *    fresh) — the yanked-`_temporary` failure mode is gone for
-    *    appends, surviving only on the dynamic-partition-overwrite path;
-    *  - the verdict no longer relies on the whole-dir-listing proof,
-    *    whose lack of per-batch identity let a SECOND concurrent
-    *    appender's files mask a carried first appender (a conservative
-    *    "rows lost" verdict whose documented blind retry DUPLICATED the
-    *    carried rows — the round-17 residual this closes).
-    * The land loop is pure metadata: one atomic rename per written file;
-    * names carry the staging job's uuid, so they collide with nothing.
-    * Readers during the loop may observe a prefix of the batch — the
-    * same visibility granularity the exactly-once protocol documents. A
-    * crash mid-loop leaves a partially landed batch (the direct job's
-    * committer had the same property: its job-commit renames task files
-    * one at a time) plus a staging leftover that [[vacuum]] reclaims.
+  /** The one in-place write protocol — appends, [[replaceGroups]] and the
+    * partition and file-pruned upserts all go through it. LAND new files,
+    * then RETIRE the ones they replace:
+    *  1. the rows are written to a PRIVATE staging dir
+    *     (`_graft_staging/_append-<uuid>`): the job may read the current
+    *     version freely, and nothing touches the staging dir while it is
+    *     fresh, so a concurrent external rewrite cannot fail the job;
+    *  2. before anything lands, `retire(target, rels)` names the files
+    *     being replaced — given the staged files' relative paths, whose
+    *     dirs are the partitions being written, already Hive-escaped;
+    *  3. each staged file is renamed into the current version (pure
+    *     metadata: one atomic rename per file, names carry the staging
+    *     job's uuid so they collide with nothing), which gives the batch
+    *     EXACT file identity for the supersede verdict;
+    *  4. one pending-delete manifest names the retired files (readers
+    *     exclude them at once; a crash before the deletes finish is
+    *     replayed by the next mutating op), the verdict
+    *     ([[verifyAppendVisibilityExact]]) runs, the files are deleted and
+    *     partition dirs left empty are removed.
+    * Readers between steps 3 and 4 see old and new rows side by side —
+    * duplicated keys, never missing ones. A crash mid-land leaves a
+    * partially landed batch (for a mutation, with its originals still
+    * visible) plus a staging leftover that [[vacuum]] reclaims. Callers
+    * never retire an invisible file ([[visibleFilesUnder]]), so an
+    * uncommitted exactly-once batch's landed prefix survives every
+    * mutation and its replay lands the rest exactly once.
     */
-  private def appendExact(df: DataFrame): Unit = {
+  private def landThenRetire(dfIn: DataFrame, op: String)(
+      retire: (String, Seq[String]) => Seq[String]): Unit = {
     val staging = s"$root/_graft_staging/_append-${java.util.UUID.randomUUID()}"
     try {
-      configuredWriter(df, "overwrite").parquet(staging)
-      val stQual = fs.makeQualified(new Path(staging)).toString
-      val rels = listParquetFiles(staging).map { abs =>
-        require(abs.startsWith(stQual + "/"), s"staged file $abs outside $stQual")
-        abs.stripPrefix(stQual + "/")
-      }
+      configuredWriter(prepared(dfIn), "overwrite").parquet(staging)
+      val rels = relativeFiles(staging)
       val target = dataPath
-      if (rels.isEmpty) { fs.mkdirs(new Path(target)); return } // empty batch: dir side effect only
+      val doomed = retire(target, rels)
+      if (rels.isEmpty && doomed.isEmpty) { fs.mkdirs(new Path(target)); return } // dir side effect only
       rels.map(r => new Path(s"$target/$r").getParent).distinct.foreach(fs.mkdirs)
       var landed = 0
       rels.foreach { rel =>
@@ -1034,7 +1011,7 @@ class TableRepo(
           // when the dir is truly gone) and throw the retry-safe typed
           // failure; if the chain carried (or MIGHT have carried) any of
           // it, the blind retry would duplicate those rows — fail loudly
-          // without the retry contract instead.
+          // without the retry contract instead. Nothing is retired yet.
           if (dataPath != target) {
             val landedMine = rels.take(landed)
               .map(r => s"${fs.makeQualified(new Path(target))}/$r").toSet
@@ -1042,12 +1019,12 @@ class TableRepo(
               case CarryNone =>
                 rels.take(landed).foreach(r => fs.delete(new Path(s"$target/$r"), false))
                 throw new java.util.ConcurrentModificationException(
-                  s"append to $target raced concurrent full rewrites: the target version " +
+                  s"$op to $target raced concurrent full rewrites: the target version " +
                     s"was superseded (current is now $dataPath) and GC'd mid-land; no rows " +
                     "are visible — retry against the new version")
               case _ =>
                 throw new java.util.ConcurrentModificationException(
-                  s"append to $target lost its dir mid-land AND part of the landed " +
+                  s"$op to $target lost its dir mid-land AND part of the landed " +
                     s"prefix ($landed of ${rels.size} files) was (or may have been) " +
                     "carried into the current version by a concurrent guarded rewrite — " +
                     "inspect before retrying (a blind retry would duplicate the carried " +
@@ -1055,14 +1032,55 @@ class TableRepo(
             }
           }
           throw new java.io.IOException(
-            s"failed to land staged append file $rel into still-current $target " +
+            s"failed to land staged $op file $rel into still-current $target " +
               s"($landed of ${rels.size} files landed and ARE visible — inspect; do " +
               "not blindly retry)")
         }
         landed += 1
       }
-      verifyAppendVisibilityExact(target, "append", rels)
+      if (doomed.nonEmpty) writePendingDeletes(doomed)
+      verifyAppendVisibilityExact(target, op, rels, doomed)
+      if (doomed.nonEmpty) {
+        doomed.foreach(f => fs.delete(new Path(f), false))
+        removeEmptyDirs(target, doomed)
+        fs.delete(pendingDeletePath, false): Unit
+      }
     } finally fs.delete(new Path(staging), true): Unit
+  }
+
+  /** The partition dirs (relative to the data dir) that staged files
+    * `rels` land in.
+    */
+  private def partitionDirsOf(rels: Seq[String]): Seq[String] =
+    rels.collect { case r if r.contains('/') => r.substring(0, r.lastIndexOf('/')) }.distinct
+
+  /** Reader-visible data files under `dirs` — the retire set of a
+    * partition replacement. Invisible files (a crashed exactly-once
+    * batch's landed prefix) are never retired: its replay still needs
+    * them.
+    */
+  private def visibleFilesUnder(dirs: Seq[String]): Seq[String] = {
+    val invisible = invisibleFiles()
+    dirs.flatMap(listParquetFiles).distinct.filterNot(invisible.contains)
+  }
+
+  /** Remove the dirs under `target` that retiring `files` left empty,
+    * walking up each partition path (nested layouts: group then bucket).
+    * A dir still holding anything — an uncommitted batch's landed file, a
+    * concurrent landing — stays.
+    */
+  private def removeEmptyDirs(target: String, files: Seq[String]): Unit = {
+    val top = fs.makeQualified(new Path(target))
+    files.map(f => fs.makeQualified(new Path(f)).getParent).distinct.foreach { d =>
+      var dir = d
+      var removed = true
+      while (removed && dir != null && dir != top) {
+        removed =
+          try fs.listStatus(dir).isEmpty && fs.delete(dir, false)
+          catch { case _: java.io.IOException => false } // gone already, or refilled
+        dir = dir.getParent
+      }
+    }
   }
 
   /** Carry-chain resolution for [[verifyAppendVisibilityExact]]: is
@@ -1130,59 +1148,80 @@ class TableRepo(
   }
 
   /** POST-LAND visibility verdict with exact per-batch file identity.
-    * Success ⇔ the rows are reader-visible: either `target` is still the
-    * current version, or the superseding CARRY CHAIN provably includes
-    * every file of this batch ([[resolveCarry]] — the chain walk also
-    * proves a batch carried by rewrite 1 and superseded again by
-    * rewrite 2 while the appender was suspended, which a single-manifest
-    * check would misreport as retry-safely lost and DUPLICATE on
-    * retry). Anything else is the LOUD typed failure; the retry
-    * contract is attached ONLY when the chain proves no file of this
-    * batch is part of the current content — an unprovable chain (GC'd
-    * link, split snapshot) fails loudly WITHOUT it.
+    * Success ⇔ the current content is this write's result: either
+    * `target` is still the current version, or the superseding CARRY
+    * CHAIN provably includes every file of this batch and none of the
+    * files it `retired` ([[resolveCarry]] — the chain walk also proves a
+    * batch carried by rewrite 1 and superseded again by rewrite 2 while
+    * the writer was suspended, which a single-manifest check would
+    * misreport as retry-safely lost and DUPLICATE on retry). Anything
+    * else is the LOUD typed failure; the retry contract is attached ONLY
+    * when the chain proves no file of this batch is part of the current
+    * content and the retired files are carried whole or not at all — an
+    * unprovable chain (GC'd link, split snapshot) or a rewrite that
+    * carried the originals alongside their replacements fails loudly
+    * WITHOUT it.
     */
   private[repo] def verifyAppendVisibilityExact(target: String, op: String,
-      rels: Seq[String]): Unit = {
+      rels: Seq[String], retired: Seq[String] = Nil): Unit = {
     val tQual = fs.makeQualified(new Path(target)).toString
     val mine: Set[String] = rels.map(r => s"$tQual/$r").toSet
     var probes = 0
     while (dataPath != target) {
       val cur = dataPath
-      resolveCarry(target, cur, mine) match {
-        case CarryFull => return // the chain carries every file: success
-        case verdict =>
-          if (probes >= 4) verdict match {
-            case CarryPartial(why) =>
-              // some of the batch is (or may be) in the current content —
-              // loud, never silent, and WITHOUT the retry contract
-              throw new java.util.ConcurrentModificationException(
-                s"$op to $target raced concurrent full rewrites and its carry is " +
-                  s"PARTIAL or unprovable ($why; current is $cur). Part of the batch " +
-                  "may be visible — inspect before retrying (a blind retry could " +
-                  "duplicate the carried part)")
-            case _ =>
-              // make the "rows not visible" verdict SELF-FULFILLING before
-              // throwing: delete this batch's files from the superseded dir.
-              // Without this, a post-marker revoke landing just after the
-              // throw (a slow verify listing on a loaded box) would resurrect
-              // the old dir WITH these files — visible rows behind a "retry"
-              // verdict, and the documented blind retry would duplicate them.
-              // After the deletes every interleaving is safe: rewrite stands →
-              // the files were invisible grace leftovers; rewrite revokes →
-              // the files are gone from the restored dir and the retry
-              // re-lands them once. The throw is then UNCONDITIONAL (never
-              // checkVersionStable, which would stay silent if the revoke
-              // landed a µs before the deletes — success reported on rows
-              // just deleted).
-              rels.foreach(r => fs.delete(new Path(s"$target/$r"), false))
-              throw new java.util.ConcurrentModificationException(
-                s"$op to $target raced a concurrent full rewrite (current version is " +
-                  s"now $cur); the batch was not carried and its files have been " +
-                  "withdrawn — no rows are visible; retry against the new version")
-          }
+      (resolveCarry(target, cur, mine), resolveCarry(target, cur, retired.toSet)) match {
+        case (CarryFull, CarryNone) => return // the chain carries exactly the result
+        case (CarryNone, CarryNone | CarryFull) if probes >= 4 =>
+          // make the "rows not visible" verdict SELF-FULFILLING before
+          // throwing: delete this batch's files from the superseded dir
+          // and drop the retire manifest, so the dir holds exactly its
+          // pre-write content again. Without this, a post-marker revoke
+          // landing just after the throw (a slow verify listing on a
+          // loaded box) would resurrect the old dir WITH these files —
+          // visible rows behind a "retry" verdict, and the documented
+          // blind retry would duplicate them. After the deletes every
+          // interleaving is safe: rewrite stands → the files were
+          // invisible grace leftovers; rewrite revokes → the restored dir
+          // is the pre-write state and the retry applies the write once.
+          // The throw is then UNCONDITIONAL (never checkVersionStable,
+          // which would stay silent if the revoke landed a µs before the
+          // deletes — success reported on rows just deleted).
+          rels.foreach(r => fs.delete(new Path(s"$target/$r"), false))
+          if (retired.nonEmpty) fs.delete(pendingDeletePath, false)
+          throw new java.util.ConcurrentModificationException(
+            s"$op to $target raced a concurrent full rewrite (current version is " +
+              s"now $cur); the batch was not carried and its files have been " +
+              "withdrawn — no rows are visible; retry against the new version")
+        case (landed, gone) if probes >= 4 =>
+          // some of the batch is (or may be) in the current content, or
+          // the originals it replaces are — loud, never silent, and
+          // WITHOUT the retry contract
+          val why = Seq(landed, gone).collectFirst { case CarryPartial(w) => w }
+            .getOrElse("the rewrite carried the replaced files alongside their replacements")
+          throw new java.util.ConcurrentModificationException(
+            s"$op to $target raced concurrent full rewrites and its carry is " +
+              s"PARTIAL or unprovable ($why; current is $cur). Part of the batch " +
+              "may be visible — inspect before retrying (a blind retry could " +
+              "duplicate the carried part)")
+        case _ =>
       }
       probes += 1
       Thread.sleep(50L) // a pending post-marker revoke lands within ms
+    }
+  }
+
+  /** [[verifyAppendVisibilityExact]] over every data file now in `target`
+    * (a caller that only knows the dir it wrote to).
+    */
+  private[repo] def verifyAppendVisibility(target: String, op: String): Unit =
+    verifyAppendVisibilityExact(target, op, relativeFiles(target))
+
+  /** Data files under `dir`, as paths relative to it. */
+  private def relativeFiles(dir: String): Seq[String] = {
+    val q = fs.makeQualified(new Path(dir)).toString
+    listParquetFiles(dir).map { abs =>
+      require(abs.startsWith(q + "/"), s"listed file $abs outside $q")
+      abs.stripPrefix(q + "/")
     }
   }
 
@@ -1222,90 +1261,6 @@ class TableRepo(
     }
   }
 
-  /** Post-write guard for IN-PLACE write jobs (since round 18: only the
-    * dynamic partition overwrite — plain appends land via
-    * [[appendExact]], whose private staging dir cannot be yanked):
-    * re-resolve the current version dir after the job and fail
-    * loudly if a full rewrite superseded `target` mid-write — the written
-    * files are invisible to readers and the next commit's GC would
-    * silently drop them. Intra-process the write lock makes this
-    * unreachable; it fires only against an EXTERNAL writer, turning silent
-    * data loss into a retryable error. DETECTION, not exclusion: against
-    * an external writer a rewrite can still land in the gap between this
-    * check and the caller's commit point (e.g. the exactly-once marker) —
-    * closing that would need a filesystem transaction; the contract
-    * remains one maintaining process per table, and this check narrows
-    * the out-of-contract blast radius to that gap.
-    */
-  /** Run an in-place write job against `target` (the CURRENT version dir
-    * at plan time), then [[checkVersionStable]]. A concurrent EXTERNAL
-    * full rewrite can supersede `target` and — one commit cycle later —
-    * GC it as an expired grace version while the job is still running,
-    * failing the job with task-level file errors (`_temporary` yanked
-    * from under the committer). That is the SAME semantic event the
-    * post-job stability check reports for a job that survives, so a
-    * failed job re-checks the version and converts to the typed,
-    * retryable `ConcurrentModificationException` the loud-failure
-    * contract promises; a genuine job failure (target still current)
-    * surfaces as itself. No rows land either way — the committer aborted
-    * before its job-commit rename. (MultiProcessSpec's churn tests drive
-    * exactly this: a child JVM appending while this process compacts in
-    * a loop occasionally spans two commit cycles inside one append job.)
-    */
-  private def inPlaceWrite(target: String, op: String)(job: => Unit): Unit = {
-    try job
-    catch {
-      case scala.util.control.NonFatal(e) if dataPath != target && looksLikeYankedDir(e, target) =>
-        val cme = new java.util.ConcurrentModificationException(
-          s"$op to $target raced a concurrent full rewrite: the target version was " +
-            s"superseded (current is now $dataPath) and GC'd mid-write, failing the " +
-            "write job; no rows landed — retry against the new version")
-        cme.initCause(e)
-        throw cme
-    }
-    verifyAppendVisibility(target, op)
-  }
-
-  /** POST-JOB visibility check for in-place writes, supersede-aware.
-    * Since round 18 only the dynamic-partition-overwrite path uses this
-    * whole-dir-listing variant (appends carry exact identity through
-    * [[verifyAppendVisibilityExact]]).
-    */
-  private[repo] def verifyAppendVisibility(target: String, op: String): Unit = {
-    // The job succeeded, so
-    // our files are on disk in `target`. If a concurrent full rewrite
-    // superseded `target` before this check, three honest outcomes:
-    //  (1) the winner is a GUARDED rewrite whose carried manifest covers
-    //      every file now in `target` — the post-marker verify proved its
-    //      content equals that snapshot, so our rows (present in the old
-    //      dir at commit time) were carried into the new current version:
-    //      this write SUCCEEDED; throwing "rows lost" here would make the
-    //      documented blind retry DUPLICATE the rows;
-    //  (2) the winner is about to be REVOKED by its own post-marker
-    //      verify (our files landed in the re-list→marker gap, and the
-    //      verify sees them within ms): bounded re-check — visibility
-    //      falls back to `target`, our rows are visible again and any
-    //      future guarded rewrite's fresh snapshot carries them: SUCCESS;
-    //  (3) the supersede stands without carrying us (an unguarded
-    //      replaceAll, or our files landed after its verify): the rows
-    //      are invisible and will be GC'd — loud typed failure, and the
-    //      blind retry is safe. Residual (documented, conservative
-    //      toward the loud failure, never silent loss): a writer
-    //      suspended across TWO full rewrite cycles cannot prove the
-    //      double-carry. Appends are immune to the second-writer masking
-    //      this whole-dir subset check allows — they verify through
-    //      their exact per-batch manifest instead.
-    var probes = 0
-    while (dataPath != target) {
-      val cur = dataPath
-      val mine = listParquetFiles(target).toSet
-      if (mine.nonEmpty && carriedManifest(cur).exists(mine.subsetOf)) return // (1)
-      if (probes >= 4) checkVersionStable(target, op) // throws: outcome (3)
-      probes += 1
-      Thread.sleep(50L) // (2): a pending revoke lands within ms
-    }
-  }
-
   /** The `_GRAFT_CARRIED` manifest of a committed guarded rewrite: the
     * source file set its content provably includes. Absent on unguarded
     * rewrites (replaceAll — content deliberately replaced) and on
@@ -1317,55 +1272,6 @@ class TableRepo(
       try Some(new String(in.readAllBytes(), "UTF-8").split("\n").filter(_.nonEmpty).toSet)
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Does this job failure look like `target` vanishing under the
-    * committer? A supersede happening concurrently is NOT enough to blame
-    * the race — an unrelated genuine failure (OOM, disk full, corrupt
-    * input, a MISSING SOURCE file, an AnalysisException whose message
-    * merely contains "does not exist") must surface as itself, not as
-    * "retryable, no rows landed". The yanked-dir shapes, narrowly: a
-    * FileNotFoundException in the cause chain, or an ENOENT-style message
-    * — and in BOTH cases the complaint must reference the superseded
-    * target (or its committer `_temporary` dir), so a missing-input
-    * failure that happens to race a supersede is never converted into
-    * the retryable verdict and hidden for a retry cycle.
-    */
-  private[repo] def looksLikeYankedDir(e: Throwable, target: String): Boolean = {
-    val tgt = new Path(target).toUri.getPath
-    var t: Throwable = e
-    var depth = 0
-    // a null-message FNFE is only accepted when it sits BENEATH a
-    // SparkException frame (the job-abort wrapper the committer raises
-    // when its dir is yanked) — a genuine missing-source FNFE thrown
-    // bare with no message, racing a supersede, must surface as itself
-    var underJobAbort = false
-    while (t != null && depth < 12) {
-      val msg = Option(t.getMessage).getOrElse("")
-      if (t.isInstanceOf[org.apache.spark.SparkException]) underJobAbort = true
-      val enoentShape = t.isInstanceOf[java.io.FileNotFoundException] ||
-        msg.contains("FILE_NOT_EXIST") ||
-        msg.contains("No such file or directory") ||
-        msg.contains("does not exist")
-      if (enoentShape && (msg.contains(tgt) || msg.contains("_temporary"))) return true
-      // a bare FNFE with NO message carries no path to judge by; the
-      // caller has already established dataPath != target (a rewrite DID
-      // supersede the dir mid-job), and the job-abort frame above says
-      // this came out of the committer, so the typed retry-safe verdict
-      // is the right call. Logged in full so that if a genuine failure
-      // is ever masked by this shape, the evidence is in the log.
-      if (t.isInstanceOf[java.io.FileNotFoundException] && t.getMessage == null
-          && underJobAbort) {
-        org.slf4j.LoggerFactory.getLogger(classOf[TableRepo]).warn(
-          s"classifying a null-message FileNotFoundException beneath a job-abort frame " +
-            s"as '$target yanked by a concurrent rewrite' (retry-safe); full chain follows " +
-            "in case this masked a genuine failure", e)
-        return true
-      }
-      t = if (t.getCause eq t) null else t.getCause
-      depth += 1
-    }
-    false
-  }
 
   private def checkVersionStable(target: String, op: String): Unit = {
     val now = dataPath
@@ -1380,7 +1286,7 @@ class TableRepo(
     * addition — no read-modify-write, no lease; safe under concurrent
     * callers because each append's write job runs in a PRIVATE staging
     * dir and lands via per-file renames of uniquely-named files
-    * ([[appendExact]]), with an exact-manifest verdict against
+    * ([[landThenRetire]]), with an exact-manifest verdict against
     * concurrent full rewrites. A crashed append may leave a partially
     * landed batch plus a staging leftover that [[vacuum]] reclaims;
     * replayable writers wanting exactly-once use [[extendExactlyOnce]].
@@ -1462,14 +1368,18 @@ class TableRepo(
     writeData(harmonize(df, schema), overwrite = true)
   }
 
-  /** Dynamic partition overwrite: groups present in `df` are replaced,
-    * untouched groups survive (core.py:153-155; tests/test_core.py:178-179).
+  /** Partition replacement: the partitions `df` writes are replaced,
+    * untouched ones survive (core.py:153-155; tests/test_core.py:178-179).
+    * A partition is a full layout-column tuple — on a bucketed grouped
+    * repo, a (group, bucket) dir. The retire set is the visible files of
+    * the dirs the staged output lands in ([[landThenRetire]]).
     */
   def replaceGroups(df: DataFrame): Unit = withWriteLock {
     replayPendingDeletes()
     require(groupCols.nonEmpty, "replaceGroups requires group columns")
     val schema = resolveSchema(df)
-    writeData(harmonize(df, schema), overwrite = true, dynamic = true)
+    landThenRetire(harmonize(df, schema), "replaceGroups")((target, rels) =>
+      visibleFilesUnder(partitionDirsOf(rels).map(d => s"$target/$d")))
   }
 
   /** Drop duplicate keys keeping the first occurrence in batch order
@@ -1495,8 +1405,9 @@ class TableRepo(
     *
     * Spark plan: MERGE as anti-join ∪ updates. For grouped repos only the
     * affected partitions (those containing matched keys plus those receiving
-    * updates) are rewritten, via dynamic partition overwrite — at 100 TB this
-    * touches a handful of partitions, not the table.
+    * updates) are rewritten, landed then retired like every in-place write
+    * ([[landThenRetire]]) — at 100 TB this touches a handful of
+    * partitions, not the table.
     */
   def replaceRecords(updates: DataFrame, byGroups: Boolean = false): Unit = withWriteLock {
     // upserts are in-place read-modify-write: two UNCOORDINATED writers
@@ -1566,62 +1477,46 @@ class TableRepo(
         if (firstN.length <= TableRepo.MaxPartitionPredicateLiterals) firstN.map(_.toSeq)
         else Array.empty
       }
+      def inPartitions(vals: Array[Seq[Any]]): Column = vals
+        .map(v => layoutCols.zip(v).map { case (c, x) => col(c) <=> lit(x) }.reduce(_ && _))
+        .reduce(_ || _)
       val scopedExisting =
-        if (affectedVals.nonEmpty) existing.filter(affectedVals
-          .map(vals => layoutCols.zip(vals).map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
-          .reduce(_ || _))
+        if (affectedVals.nonEmpty) existing.filter(inPartitions(affectedVals))
         else existing.join(affectedDf, layoutCols, "left_semi")
       val survivors = scopedExisting
         .join(u2.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      // Materialize the merge ONCE (checkpoint), then both the
-      // emptied-partition detection and the write read the materialized
-      // rows instead of recomputing the anti-join.
-      val newData = stage(survivors.unionByName(u2))
-      // Dynamic overwrite only touches partitions PRESENT in newData; an
-      // affected partition whose rows were all consumed (an unscoped
-      // upsert moving a key to another group) must be deleted explicitly.
-      // One bounded collect (driver set difference on the literal path, an
-      // anti-join on the fallback path).
-      val emptiedGroups: Array[Seq[Any]] =
-        if (updatesDefineScope) Array.empty
-        else if (affectedVals.nonEmpty) {
-          val present = newData.select(layoutCols.map(col): _*).distinct()
-            .collect().map(_.toSeq).toSet
-          affectedVals.filterNot(present.contains)
-        } else affectedDf
-          .join(newData.select(layoutCols.map(col): _*).distinct(), layoutCols, "left_anti")
-          .collect().map(_.toSeq)
-      // Resolve the emptied partitions' on-disk dirs from the FILES Spark
-      // actually read (`input_file_name`), not from rendered `col=value`
-      // strings — Spark Hive-escapes special chars and uses a null
-      // sentinel, so a hand-built path misses the real dir and the stale
-      // rows of a moved key would silently survive as duplicates. Runs
-      // before the overwrite (files still on disk), prunes to the emptied
-      // partitions only, bounded by the affected-partition cap.
-      val emptiedFiles: Array[Path] =
-        if (emptiedGroups.isEmpty) Array.empty
-        else existing
-          .filter(emptiedGroups.map(vals =>
-            layoutCols.zip(vals).map { case (c, v) => col(c) <=> lit(v) }.reduce(_ && _))
-            .reduce(_ || _))
-          .select(input_file_name()).distinct()
-          // input_file_name returns URI-ENCODED strings ('%' → %25);
-          // Path(String) would keep the encoding and miss the dir, so
-          // decode once through java.net.URI and keep Path objects
-          .collect().map(r => new Path(new java.net.URI(r.getString(0))))
-      val emptiedDirs: Array[Path] = emptiedFiles.map(_.getParent).distinct
-      writeData(newData, overwrite = true, dynamic = true, alreadyStaged = true)
-      if (emptiedDirs.nonEmpty) {
-        // The delete phase gets the SAME crash protection as the pruned
-        // merge's: after the overwrite commits, a manifest names the
-        // emptied partitions' doomed files — readers exclude them at once
-        // and the next mutating op replays the deletes — so a crash
-        // mid-delete can no longer resurrect a moved key's old row as a
-        // permanent duplicate. Residual window: the one tiny manifest
-        // write, identical to the pruned path's documented residual.
-        writePendingDeletes(emptiedFiles.map(_.toString).toIndexedSeq)
-        emptiedDirs.foreach(d => fs.delete(d, true))
-        fs.delete(pendingDeletePath, false): Unit
+      landThenRetire(survivors.unionByName(u2), "replaceRecords") { (target, rels) =>
+        // Every partition the merge writes is replaced. An UNSCOPED upsert
+        // can also EMPTY an affected partition (all its keys moved to
+        // other groups): nothing lands there, so its dirs are added from
+        // the FILES Spark reads (`input_file_name`), not from rendered
+        // `col=value` strings — Spark Hive-escapes special chars and uses a
+        // null sentinel, so a hand-built path could miss the real dir and
+        // the moved key's stale row would survive as a duplicate. On the
+        // literal path only the partitions absent from the staged output
+        // are scanned (a value whose rendering is not the writer's, e.g. a
+        // timestamp, is scanned too — harmless, its dirs are retired
+        // anyway); past the literal cap, every affected partition is.
+        // input_file_name returns URI-ENCODED strings ('%' → %25); Path(String)
+        // would keep the encoding and miss the dir, so decode once through
+        // java.net.URI.
+        def dirsRead(files: DataFrame): Seq[String] =
+          files.distinct().collect()
+            .map(r => new Path(new java.net.URI(r.getString(0))).getParent.toString).distinct.toSeq
+        val written = partitionDirsOf(rels)
+        val emptiedDirs =
+          if (updatesDefineScope) Nil
+          else if (affectedVals.isEmpty)
+            dirsRead(existing.withColumn("__graft_file__", input_file_name())
+              .join(affectedDf, layoutCols, "left_semi").select("__graft_file__"))
+          else {
+            val writtenSet = written.toSet
+            val unwritten = affectedVals.filterNot(v => writtenSet.contains(
+              layoutCols.zip(v).map { case (c, x) => TableRepo.dirSegment(c, x) }.mkString("/")))
+            if (unwritten.isEmpty) Nil
+            else dirsRead(existing.filter(inPartitions(unwritten)).select(input_file_name()))
+          }
+        visibleFilesUnder(written.map(d => s"$target/$d") ++ emptiedDirs)
       }
     }
   }
@@ -1655,12 +1550,11 @@ class TableRepo(
     * merge itself stays correct), and NaN-poisoned footer bounds are
     * discarded by [[FileStats]].
     *
-    * Sequencing: the merged replacement files are APPENDED first, then
-    * the affected originals are deleted — a concurrent reader in the gap
-    * sees duplicated keys rather than missing ones. A pending-delete
-    * manifest written between the two makes the delete phase crash-safe:
-    * readers exclude manifest files, and the next mutating op replays the
-    * deletes (see the manifest block near `paths`).
+    * Sequencing: the shared in-place protocol ([[landThenRetire]]) with
+    * the affected files as the retire set — the merged replacement files
+    * land first, then the originals are retired through the pending-delete
+    * manifest, so a concurrent reader in the gap sees duplicated keys
+    * rather than missing ones and a crash mid-delete is replayed.
     */
   def replaceRecordsPruned(updates: DataFrame, byGroups: Boolean = false): Unit = withWriteLock {
     // same enforced single-writer rule as [[replaceRecords]]; the
@@ -1709,7 +1603,7 @@ class TableRepo(
         val dirVals = lu.distinct().collect().map(_.toSeq)
         if (dirVals.length > TableRepo.MaxPartitionPredicateLiterals) {
           // scope too wide for per-dir listing to pay off; the partition
-          // merge handles it with one dynamic overwrite
+          // merge handles it
           replaceRecords(updates, byGroups); return
         }
         // same invisible-file exclusion as `paths`: a crashed exactly-once
@@ -1764,10 +1658,7 @@ class TableRepo(
       val merged = stage(readFilesScoped(affected)
         .join(u.select(effKeys.map(col): _*).distinct(), effKeys, "left_anti")
         .unionByName(u))
-      writeData(merged, overwrite = false)
-      writePendingDeletes(affected)
-      affected.foreach(p => fs.delete(new Path(p), false))
-      fs.delete(pendingDeletePath, false): Unit
+      landThenRetire(merged, "replaceRecordsPruned")((_, _) => affected)
     }
   }
 
@@ -2168,16 +2059,16 @@ class TableRepo(
 
   // ------------------------------------------- pending-delete manifest
   //
-  // The pruned merge appends its replacement files FIRST and deletes the
-  // superseded originals after. A crash between the two used to leave
-  // duplicate keys on disk permanently. The delete phase is now preceded
-  // by a manifest (`_graft_pending_delete`) naming the doomed files:
-  // readers exclude manifest files from every scan (their replacements
-  // are already committed), and the next mutating op physically replays
-  // the deletes. The residual window — a crash after the append commit
-  // but before the manifest write — leaves duplicates like the
-  // pre-manifest design, but is one tiny-file write wide instead of a
-  // whole delete loop.
+  // Every partition-scoped mutation (replaceGroups, the partition and
+  // file-pruned upserts) lands its replacement files FIRST and retires the
+  // superseded originals after, in one step ([[landThenRetire]] — the only
+  // writer of this manifest). Before the deletes, a manifest
+  // (`_graft_pending_delete`) names the doomed files: readers exclude
+  // manifest files from every scan (their replacements are already
+  // landed), and the next mutating op physically replays the deletes, so
+  // a crash mid-delete never leaves duplicate keys. The residual window —
+  // a crash after the land loop but before the manifest write — leaves
+  // old and new rows side by side, one tiny-file write wide.
   private def pendingDeletePath: Path = new Path(s"$root/_graft_pending_delete")
 
   private def pendingDeleteSet(): Set[String] = {
@@ -2427,12 +2318,7 @@ class TableRepo(
     val schema = resolveSchema(df)
     val data = clustered(routeToBuckets(withLayout(harmonize(df, schema))))
     configuredWriter(data, "overwrite").parquet(staging)
-    val stQual = fs.makeQualified(new Path(staging)).toString
-    val rels = listParquetFiles(staging).map { abs =>
-      require(abs.startsWith(stQual + "/"), s"staged file $abs outside $stQual")
-      abs.stripPrefix(stQual + "/")
-    }
-    writeBatchManifest(writerId, batchId, dataPath, rels)
+    writeBatchManifest(writerId, batchId, dataPath, relativeFiles(staging))
   }
 
   private def manifestPath(writerId: String, batchId: Long): Path =
@@ -2856,7 +2742,7 @@ object TableRepo {
 
   /** One `col=value` path segment rendered with the writer's own rule:
     * Hive path-escaping for special chars plus the Hive null sentinel
-    * (`ExternalCatalogUtils` is the exact code Spark's dynamic partition
+    * (`ExternalCatalogUtils` is the exact code Spark's `partitionBy`
     * writer uses, so escaped group values resolve to the real dir).
     */
   private[repo] def dirSegment(c: String, v: Any): String =

@@ -1,5 +1,6 @@
 package graft.repo
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -135,6 +136,66 @@ class TableRepoSpec extends SparkSuite {
     assert(out.filter($"C2" === "a").count() == 1) // replaced
     assert(out.filter($"C2" === "b").count() == 1) // untouched
     assert(out.filter($"C2" === "ba").count() == 1) // untouched
+  }
+
+  /** The crash shape of an uncommitted exactly-once batch inside the
+    * partition a mutation replaces: batch 1 of writer `w` staged with its
+    * manifest pinned and ONE staged file already renamed into the `g=a`
+    * dir, commit marker absent. Returns the repo and the landed file.
+    */
+  private def withLandedPrefix(name: String): (TableRepo, Path) = {
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val repo = new TableRepo(scratch(name), spark,
+      groupCols = Seq("g"), keyCols = Seq("k"), maxRecordsPerFile = 3)
+    assert(repo.extendExactlyOnce(gbatch(0, 5), "w", 0L))
+    repo.stageBatchOnly(gbatch(5, 17), "w", 1L)
+    val staging = fs.makeQualified(new Path(s"${repo.root}/_graft_staging/w-1"))
+    val it = fs.listFiles(staging, true)
+    var moved: Path = null
+    while (moved == null && it.hasNext) {
+      val f = it.next().getPath
+      if (f.getName.endsWith(".parquet")) moved = f
+    }
+    val rel = moved.toString.stripPrefix(staging.toString + "/")
+    val cur = repo.snapshotVersions.lastOption.map(v => s"data-v$v").getOrElse("data")
+    val landed = new Path(s"${repo.root}/$cur/$rel")
+    assert(rel.startsWith("g=a/") && fs.rename(moved, landed))
+    assert(repo.count() == 5, "landed prefix invisible")
+    (repo, landed)
+  }
+
+  private def gbatch(lo: Int, hi: Int): DataFrame =
+    (lo until hi).map(i => (i.toLong, s"row-$i", "a")).toDF("k", "v", "g")
+
+  /** The replayed batch landed whole: keys 5..16, each exactly once. */
+  private def assertBatchOnce(repo: TableRepo): Unit = {
+    val batchKeys = repo.getFullDf.where($"k".between(5L, 16L)).groupBy("k").count()
+    assert(batchKeys.count() == 12, "every batch key is visible")
+    assert(batchKeys.filter($"count" =!= 1).count() == 0, "no batch key landed twice")
+  }
+
+  test("replaceGroups keeps an uncommitted batch's landed file; the replay lands the batch once") {
+    val (repo, landed) = withLandedPrefix("rgroups-landed")
+    repo.replaceGroups(Seq((100L, "new-100", "a"), (101L, "new-101", "a")).toDF("k", "v", "g"))
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(landed), "the replaced partition's uncommitted landed file must survive")
+    assert(repo.count() == 2, "g=a replaced: only the two new rows are visible")
+    assert(repo.extendExactlyOnce(gbatch(5, 17), "w", 1L))
+    assertBatchOnce(repo)
+    assert(repo.count() == 14, "2 replacement rows + 12 batch rows")
+  }
+
+  test("a grouped replaceRecords keeps an uncommitted batch's landed file; the replay lands the batch once") {
+    val (repo, landed) = withLandedPrefix("rrecords-landed")
+    repo.replaceRecords(Seq((0L, "UPD-0", "a"), (100L, "new-100", "a")).toDF("k", "v", "g"),
+      byGroups = true)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    assert(fs.exists(landed), "the rewritten partition's uncommitted landed file must survive")
+    assert(repo.count() == 6, "5 originals (k=0 updated) + 1 new key")
+    assert(repo.getFullDf.where($"k" === 0L).select("v").as[String].collect().toSeq == Seq("UPD-0"))
+    assert(repo.extendExactlyOnce(gbatch(5, 17), "w", 1L))
+    assertBatchOnce(repo)
+    assert(repo.count() == 18, "6 upserted-table rows + 12 batch rows")
   }
 
   test("replaceAll and purge (test_core.py:157-167)") {

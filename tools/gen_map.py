@@ -62,7 +62,7 @@ ROWS = [
      line_of("src/main/scala/graft/repo/HashBucket.scala", r"case class Md5ModExpr"),
      spec("HashBucketSpec")),
     ("A8", "grouped write", "inside `q_scan_union`",
-     line_of(TR, r"def replaceGroups|partitionBy"), spec("TableRepoSpec")),
+     line_of(TR, r"w = w\.partitionBy\(layoutCols"), spec("TableRepoSpec")),
     ("A9", "keyed upsert (+bucketed/pruned variants)",
      qcell("q_upsert", "q_upsert_pruned", "q_upsert_bucketed", "q_upsert_pruned_grouped"),
      line_of(TR, r"def replaceRecords\(") + ", " + line_of(TR, r"def replaceRecordsPruned\("),
@@ -71,8 +71,10 @@ ROWS = [
      line_of(TR, r"def replaceRecords\("), spec("TableRepoSpec")),
     ("A11", "input key-dedup keep-first", qcell("q_dedup_first"),
      qline("q_dedup_first"), spec("QueriesSpec")),
-    ("A12", "dynamic partition overwrite", qcell("q_partition_overwrite"),
-     line_of(TR, r"def replaceGroups"), spec("TableRepoSpec")),
+    ("A12", "partition overwrite (`replaceGroups`, land-then-retire)",
+     qcell("q_partition_overwrite"),
+     line_of(TR, r"def replaceGroups") + ", " + line_of(TR, r"def landThenRetire"),
+     spec("TableRepoSpec", "LandThenRetireSpec")),
     ("A13", "full overwrite (snapshot-versioned)", "ScalaTest-covered (write op)",
      line_of(TR, r"def replaceAll") + ", " + line_of(TR, r"def commitNewVersionOnce"),
      spec("SnapshotVersionSpec", "MultiProcessSpec", "WeakStoreSpec")),
