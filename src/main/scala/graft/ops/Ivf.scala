@@ -8,10 +8,10 @@ import org.apache.spark.sql.types.DoubleType
 import graft.functions.VectorFns
 
 /** Trained IVF: pinned-seed Lloyd's k-means over an embedding column,
-  * shared by `q_ivf_train` and the IVF recall rows in
-  * [[graft.RecallStudy]]. (Reference scope: the engine's ANN surface —
-  * cross-engine parity demands full determinism, so every source of
-  * float drift is pinned.)
+  * shared by `q_ivf_train` and the IVF recall rows of RecallStudy
+  * (SCALE.md "Retired measurement mains"). (Reference scope: the
+  * engine's ANN surface — cross-engine parity demands full determinism,
+  * so every source of float drift is pinned.)
   *
   * Determinism contract (the DuckDB oracle replays it bit-for-bit):
   *   - seed centroids = the k lowest `vec_id` vectors (float components
@@ -220,8 +220,9 @@ object Ivf {
   /** Trained-IVF ANN top-k (the q_ivf_probe engine): train pinned-seed
     * centroids, assign the corpus once, then answer each query from the
     * members of its `nprobe` nearest clusters only — the classic IVF
-    * trade ([[graft.RecallStudy]] measures recall 0.30/0.50 at nprobe
-    * 1/2 on sf0.1). Scale shape: queries×centroids is a broadcast
+    * trade (RecallStudy, SCALE.md "Retired measurement mains", measured
+    * recall 0.30/0.50 at nprobe 1/2 on sf0.1). Scale shape:
+    * queries×centroids is a broadcast
     * cross of two tiny frames ([[route]]); the candidate join touches
     * ~nprobe/k of the corpus (at rest, cluster-partition the assignment
     * table and this becomes partition pruning); the per-query top-k

@@ -145,7 +145,8 @@ object IvfRepo {
     * accumulates). A pipeline monitors the occupancy signal per ingest
     * batch and confirms with the cosine trend before scheduling
     * [[rebuild]]; the operating thresholds are measured by
-    * `IvfDriftStudy` and documented in SCALE.md.
+    * `IvfDriftStudy` and documented in SCALE.md (the study itself:
+    * SCALE.md "Retired measurement mains").
     */
   case class DriftStats(n: Long, clusters: Long, maxClusterFrac: Double,
       meanAssignCos: Double)

@@ -43,19 +43,21 @@ object Queries {
     * §1.2: don't compute things you throw away). This memoizes METADATA
     * only — the exact contract TableRepo's pinned schema already
     * provides for repo reads; every action still computes results from
-    * the parquet data. Keyed by full path: a different sf dir (or a
-    * fresh JVM — the driver's bench/verify runs) re-infers. The one
+    * the parquet data. One entry per full path, holding the (mtime,
+    * length) it was inferred at: a different sf dir (or a fresh JVM —
+    * each Bench/Verify run) re-infers, and a changed file
+    * replaces its path's entry instead of adding one. The one
     * flag-sensitive case (TIMESTAMP(NANOS) under
     * spark.sql.legacy.parquet.nanosAsLong) is uniform here: every
     * harness session pre-sets the flag at build, and [[eventsUs]]
     * adapts to whichever physical type the memoized schema carries.
     */
   private val tSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, StructType)]()
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    // key the memo on (path, mtime, length): a source file regenerated
+    // validate the memo on (mtime, length): a source file regenerated
     // in-place within one JVM (the driver regenerates /root/testdata
     // mid-round sometimes) re-infers instead of serving a stale schema —
     // spark.read.schema(...) is never validated against footers, so a
@@ -65,8 +67,9 @@ object Queries {
       val p = Paths.get(path)
       (Files.getLastModifiedTime(p).toMillis, Files.size(p))
     } catch { case _: Exception => (-1L, -1L) }
-    val sch = tSchemas.computeIfAbsent(s"$path@$mt:$len",
-      _ => spark.read.parquet(path).schema)
+    val (_, _, sch) = tSchemas.compute(path, (_, hit) =>
+      if (hit != null && hit._1 == mt && hit._2 == len) hit
+      else (mt, len, spark.read.parquet(path).schema))
     spark.read.schema(sch).parquet(path)
   }
 
@@ -1302,8 +1305,8 @@ object Queries {
     // same-bucket neighbors (id pairs only, deduplicated BEFORE the
     // cosine fetch) — the multi-probe shape that keeps per-table bucket
     // occupancy ~n/2^bits while the table OR recovers recall.
-    // MEASURED recall (graft.RecallStudy; SCALE.md "ANN recall"):
-    // 4 tables find 91% of planted cos-0.95 twins (1 table: 39%) —
+    // MEASURED recall (RecallStudy, SCALE.md "Retired measurement mains";
+    // SCALE.md "ANN recall"): 4 tables find 91% of planted cos-0.95 twins (1 table: 39%) —
     // scale-invariant from n=2k to 20k; isotropic mid-cosine top-5
     // recall is ~0.11 at 364 candidates/query, i.e. this is a near-dup
     // sieve, not a general retrieval index (q_topk_cosine / q_ann_ivf
@@ -1353,9 +1356,9 @@ object Queries {
     // broadcast query side — an explode of bits+1 bucket ids — while the
     // corpus is bucketed ONCE; candidate volume per query is
     // (bits+1) * occupancy. Standard multi-probe LSH (Lv et al.,
-    // VLDB'07) in one equi-join. MEASURED recall (graft.RecallStudy;
-    // SCALE.md "ANN recall"): Hamming≤1 probes on ONE table find 77% of
-    // planted cos-0.95 twins vs 39% unprobed — the memory-lean recall
+    // VLDB'07) in one equi-join. MEASURED recall (RecallStudy, SCALE.md
+    // "Retired measurement mains"; SCALE.md "ANN recall"): Hamming≤1
+    // probes on ONE table find 77% of planted cos-0.95 twins vs 39% unprobed — the memory-lean recall
     // lever (one stored table vs four), at ~2x the candidate volume of
     // the 4-table OR.
     Q("q_ann_srp_probe", Some {
@@ -1700,8 +1703,8 @@ object Queries {
 
     // ---- trained-IVF ANN probe ----------------------------------------
     // The retrieval face of q_ivf_train: answer each query from its
-    // nprobe=2 nearest trained clusters only (RecallStudy: recall@5
-    // 0.50 at half the corpus untouched on sf0.1; nprobe scales recall
+    // nprobe=2 nearest trained clusters only (RecallStudy, SCALE.md
+    // "Retired measurement mains": recall@5 0.50 at half the corpus untouched on sf0.1; nprobe scales recall
     // smoothly toward exhaustive). Same query/top-k protocol as
     // q_topk_cosine so the two are directly comparable. DELIBERATELY
     // trains inside the query: this row is the self-contained ORACLE DEMO

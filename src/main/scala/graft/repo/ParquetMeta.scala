@@ -13,16 +13,12 @@ import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
   * (`extra_metadata` merge at core.py:294-301, read-back at
   * core.py:535-536), so any foreign parquet reader sees it. Spark's
   * writer offers no hook for custom footer KV, hence the repo's sidecar
-  * (`_repo_meta.json`) — this module closes the gap: [[embed]] rewrites
-  * a file with extra KV pairs while BYTE-COPYING the row groups
+  * (`_repo_meta.json`) — this module closes the gap: [[embed]] copies a
+  * file with extra KV pairs while BYTE-COPYING the row groups
   * (`appendFile` — no decode/re-encode, cost is IO not CPU), preserving
   * the existing KV (including Spark's own schema key) so engine reads
-  * are unaffected.
-  *
-  * Scale: this is an administrative operation over file FOOTERS; cost is
-  * one sequential copy per file. TableRepo.embedMetadata drives it per
-  * leaf file from the driver — for repos with very many files, map the
-  * same call over a Dataset of paths.
+  * are unaffected. Atomicity is the caller's: TableRepo.embedMetadata
+  * copies every file into a fresh snapshot version and commits it whole.
   */
 object ParquetMeta {
 
@@ -33,45 +29,27 @@ object ParquetMeta {
     finally r.close()
   }
 
-  /** Rewrite `path` in place with `extra` merged into its footer KV
-    * (existing keys preserved; `extra` wins on collision). Atomic at the
-    * filesystem-rename level: the copy lands in a temp sibling first.
+  /** Copy `src` to `dst` with `extra` merged into its footer KV (existing
+    * keys preserved; `extra` wins on collision). `dst` must not exist; a
+    * failure leaves a partial `dst` for the caller to discard.
     */
-  def embed(conf: Configuration, path: Path, extra: Map[String, String]): Unit = {
-    val in = HadoopInputFile.fromPath(path, conf)
+  def embed(conf: Configuration, src: Path, dst: Path, extra: Map[String, String]): Unit = {
+    val in = HadoopInputFile.fromPath(src, conf)
     val (schema, existing) = {
       val r = ParquetFileReader.open(in)
       try (r.getFooter.getFileMetaData.getSchema,
         r.getFooter.getFileMetaData.getKeyValueMetaData.asScala.toMap)
       finally r.close()
     }
-    val tmp = new Path(path.getParent, s".${path.getName}.kvtmp")
-    val fs = path.getFileSystem(conf)
     // row-group size / padding are irrelevant here: the writer only
     // appendFile()s existing row groups verbatim
-    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(tmp, conf), schema,
-      ParquetFileWriter.Mode.OVERWRITE,
+    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(dst, conf), schema,
+      ParquetFileWriter.Mode.CREATE,
       org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE.toLong, 0)
-    w.start()
-    w.appendFile(in)
-    w.end((existing ++ extra).asJava)
-    // Swap via rename-to-backup, never delete-then-rename: a delete-first
-    // swap that dies (or whose rename fails) between the two steps has
-    // destroyed the only committed copy of the data file. Here SOME copy
-    // of the row groups exists at every instant — a failure restores the
-    // original and a crash leaves it recoverable under the dot-prefixed
-    // backup name (invisible to engine reads, like the temp).
-    val bak = new Path(path.getParent, s".${path.getName}.kvbak")
-    fs.delete(bak, false) // stale leftover from a prior crash
-    if (!fs.rename(path, bak)) {
-      fs.delete(tmp, false): Unit
-      throw new java.io.IOException(s"failed to stage $path aside for footer rewrite")
-    }
-    if (!fs.rename(tmp, path)) {
-      fs.rename(bak, path) // restore — the original is never lost
-      fs.delete(tmp, false): Unit
-      throw new java.io.IOException(s"failed to swap footer-rewritten file into $path")
-    }
-    fs.delete(bak, false): Unit
+    try {
+      w.start()
+      w.appendFile(in)
+      w.end((existing ++ extra).asJava)
+    } finally w.close() // idempotent after end(); releases the stream on failure
   }
 }

@@ -184,9 +184,9 @@ class TableRepo(
   def root: String = currentParent.map(p => s"$p/$name").getOrElse(rootPath)
   // ------------------------------------------------- snapshot versions
   //
-  // Full-rewrite operations (replaceAll, compact, schema backfill) are
-  // SNAPSHOT-ISOLATED: each writes a fresh committed version directory
-  // (`data-v<N>` + `_GRAFT_COMMIT` marker — our own marker, so a cluster
+  // Full-rewrite operations (replaceAll, compact, embedMetadata, schema
+  // backfill) are SNAPSHOT-ISOLATED: each writes a fresh committed version
+  // directory (`data-v<N>` + `_GRAFT_COMMIT` marker — our own marker, so a cluster
   // that disables the committer's _SUCCESS files changes nothing) and
   // readers resolve the highest committed version at PLAN time. The
   // superseded version stays on disk as a GRACE version until the next
@@ -220,7 +220,7 @@ class TableRepo(
   //     ([[landThenRetire]]): if a concurrent external rewrite superseded
   //     their target, they end in a PROVEN carry or FAIL LOUDLY with a typed
   //     ConcurrentModificationException, never silent loss. CONTENT-PRESERVING
-  //     rewrites (compact, schema backfill) are additionally
+  //     rewrites (compact, embedMetadata, schema backfill) are additionally
   //     source-guarded: their content plan lists AFTER the version
   //     claim, a re-list before the commit marker aborts-and-retries
   //     when an external appender landed files mid-rewrite, and a
@@ -276,8 +276,8 @@ class TableRepo(
     * tombstones with the table.
     */
   /** With `guardSource = true` (content-preserving rewrites: compact,
-    * schema backfill) the commit is guarded against CROSS-PROCESS
-    * appenders: the current version's file-set snapshot is taken right
+    * embedMetadata, schema backfill) the commit is guarded against
+    * CROSS-PROCESS appenders: the current version's file-set snapshot is taken right
     * after the claim, `write` must list its source AFTER that snapshot
     * (its plan is constructed inside the callback), and the set is
     * re-listed TWICE — right before the commit marker (cheap early
@@ -1719,7 +1719,6 @@ class TableRepo(
     * wide — correctness is identical, only the skip rate changes).
     */
   def readWhereIn(needles: DataFrame, column: String): DataFrame = {
-    repairFooterRewrites() // a crashed embed must not silently hide rows
     val files = prunedFilesFor(needles, column)
     if (files.isEmpty) getFullDf.limit(0)
     else readFilesScoped(files)
@@ -1748,7 +1747,6 @@ class TableRepo(
     // .pending manifests would pin same-numbered future version dirs
     fs.delete(new Path(s"$root/_graft_ledger"), true)
     fs.delete(new Path(s"$root/_graft_staging"), true)
-    fs.delete(new Path(footerRewriteMarker), false)
     fs.delete(Lease.pathIn(root), false) // a crashed upsert's lease dies with the table
     fs.delete(new Path(schemaPath), false)
     fs.delete(new Path(metaPath), false)
@@ -1765,7 +1763,6 @@ class TableRepo(
     */
   private def metadataRowCount(): Long = {
     if (!exists) return 0L
-    repairFooterRewrites()
     val pend = invisibleFiles()
     FileStats.rowCount(spark, listParquetFiles(dataPath).filterNot(pend.contains))
   }
@@ -1783,7 +1780,6 @@ class TableRepo(
     * back to a merged-schema inference read.
     */
   private def readRaw(): DataFrame = {
-    repairFooterRewrites()
     val rd = pinnedSchema match {
       case Some(p) => spark.read.schema(p)
       case None    => spark.read.option("mergeSchema", "true")
@@ -1865,10 +1861,6 @@ class TableRepo(
     * applied exactly when `version` resolves to it.
     */
   def getDfAt(version: Int): DataFrame = {
-    // a crashed embed hides CURRENT-version files under .kvbak names;
-    // time-travel reads resolving to the current version (IvfIndex
-    // probes pin it) must repair like every other read surface
-    repairFooterRewrites()
     val vs = committedVersions
     require(vs.contains(version),
       s"no committed snapshot data-v$version under $root (on disk: ${vs.mkString(", ")})")
@@ -1979,7 +1971,6 @@ class TableRepo(
     * pruned merge already replaced (pending-delete manifest).
     */
   def paths: Seq[String] = {
-    repairFooterRewrites()
     val pend = invisibleFiles()
     listParquetFiles(dataPath).filterNot(pend.contains)
   }
@@ -2108,87 +2099,6 @@ class TableRepo(
       fs.delete(pendingDeletePath, false): Unit
     }
     sweepStaleLedgerManifests()
-    // the backup-restore scan is a RECURSIVE listing of the data dir —
-    // real money on a repo with many small files (exactly compact's
-    // pre-state) — and .kvbak files can only exist where embedMetadata
-    // has ever run, which it marks; everyone else pays one exists().
-    // strict: a mutating op must never proceed while a live foreign
-    // embed has rows staged aside (a rewrite would lose them)
-    repairFooterRewrites(strict = true)
-  }
-
-  /** Restore crashed-embed artifacts and CLEAR the marker once the scan
-    * proves the state clean. The marker brackets each embed (set before
-    * the first rewrite, cleared after the last backup is gone), so
-    * outside a crash window it does not exist and this gate costs one
-    * `exists()` — cheap enough that READ planning runs it too
-    * ([[readRaw]]/[[paths]]): a crashed embed's staged-aside file lives
-    * only under its invisible `.kvbak` name, and before this gate a
-    * read-only consumer silently missed its rows indefinitely, until some
-    * mutating op happened to run.
-    *
-    * OWNERSHIP GATE (cross-process): the marker carries its writer's
-    * [[TableRepo.ProcessToken]] and is heartbeat-refreshed before every
-    * file rewrite. Repair runs only when the marker is provably a crash
-    * leftover — our own token (a live embed in this JVM would be holding
-    * the write monitor we hold right now), or a foreign token whose
-    * heartbeat went stale ([[TableRepo.FooterMarkerStaleMs]]). Without
-    * the gate, a reader in a DIFFERENT JVM mid-embed would "restore" a
-    * `.kvbak` that is legitimately in flight — racing the embed's rename
-    * pair — and then delete the marker out from under it, re-opening the
-    * silent-loss window this repair exists to close. A fresh foreign
-    * marker makes reads proceed un-repaired (they can miss at most the
-    * one file currently staged aside, for the duration of its rewrite)
-    * and makes MUTATING ops fail loudly (`strict`): a full rewrite
-    * planned while rows hide under `.kvbak` names would lose them
-    * permanently, so it must wait out the embed (or its staleness TTL).
-    */
-  private def repairFooterRewrites(strict: Boolean = false): Unit = {
-    val mp = new Path(footerRewriteMarker)
-    if (fs.exists(mp)) withWriteLock {
-      if (fs.exists(mp)) {
-        footerMarkerState(mp) match {
-          case Some(true) =>
-            restoreFooterBackups() // throws on a failed rename: marker survives
-            fs.delete(mp, false): Unit
-          case Some(false) if strict =>
-            throw new java.util.ConcurrentModificationException(
-              s"footer-rewrite marker under $root has a fresh heartbeat from another " +
-                "process: an embedMetadata is (or very recently was) rewriting this " +
-                "table's files, and mutating it now would race those swaps or lose the " +
-                "rows it has staged aside — wait for the embed to finish (the marker " +
-                s"clears) or go stale (${TableRepo.FooterMarkerStaleMs} ms) and retry")
-          case _ => () // live foreign under a plain read, or vanished mid-check
-        }
-      }
-    }
-  }
-
-  /** Marker triage (caller holds the write monitor). `Some(true)`: a
-    * crash leftover this process may repair — own token (a live embed in
-    * this JVM would be holding the monitor), or a foreign token whose
-    * heartbeat mtime is stale (legacy empty markers included).
-    * `Some(false)`: a LIVE foreign embed — fresh heartbeat. `None`: the
-    * marker VANISHED mid-check — that embed completed cleanly, so there
-    * is nothing to repair and nothing to wait for; treating it as "live
-    * foreign" would spuriously fail a mutating op on a clean table.
-    */
-  private def footerMarkerState(mp: Path): Option[Boolean] =
-    try {
-      val in = fs.open(mp)
-      val token = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      Some(token == TableRepo.ProcessToken ||
-        System.currentTimeMillis() - fs.getFileStatus(mp).getModificationTime >
-          TableRepo.FooterMarkerStaleMs)
-    } catch { case _: java.io.FileNotFoundException => None }
-
-  /** Write the marker with this process's token; while the embed runs, a
-    * time-based [[FileHeartbeat]] keeps its mtime fresh (setTimes).
-    */
-  private def writeFooterMarker(): Unit = {
-    val out = fs.create(new Path(footerRewriteMarker), true)
-    try out.write(TableRepo.ProcessToken.getBytes("UTF-8"))
-    finally out.close()
   }
 
   /** A `.pending` manifest whose batch already has its commit marker (or
@@ -2552,116 +2462,42 @@ class TableRepo(
     * groups are byte-copied — see [[ParquetMeta.embed]]. Keys are
     * prefixed like the reference's scheme to avoid colliding with
     * engine-owned KV entries.
+    *
+    * A content-preserving full rewrite with [[compact]]'s shape: every
+    * visible file is copied to the same relative path in a fresh
+    * `data-v<N>` and the version commits source-guarded, so readers see
+    * all-old or all-new footers, a failed or crashed copy is discarded
+    * with its unblessed dir, and cross-process appenders get the
+    * carry/abort verdicts of the snapshot-versions block. The price is
+    * compact's: the superseded version holds a second copy of the
+    * table's bytes until the next full rewrite or [[vacuum]] drops it.
+    * Empty metadata (or an empty repo) commits nothing.
     */
   def embedMetadata(prefix: String = "graft."): Unit = withWriteLock {
-    // under the write lock: the per-file swap stages each data file aside
-    // (rename-to-backup), and a concurrent pruned upsert deleting or
-    // rewriting the same file mid-swap would race the renames
-    val mp = new Path(footerRewriteMarker)
-    if (fs.exists(mp)) {
-      // repair a prior crashed embed — but only a provable leftover: a
-      // marker with a fresh FOREIGN heartbeat is a live embed in another
-      // process, and racing its swaps would corrupt both
-      footerMarkerState(mp) match {
-        case Some(true)  => restoreFooterBackups()
-        case Some(false) => throw new java.util.ConcurrentModificationException(
-          s"embedMetadata under $root: the footer-rewrite marker carries a fresh " +
-            "heartbeat from another process — a concurrent embed is rewriting these " +
-            "files; two embeds would race each other's stage-aside renames. Wait for " +
-            "it to finish or for its marker to go stale, then retry")
-        case None => () // vanished mid-check: that embed completed cleanly
-      }
-    }
+    replayPendingDeletes()
     val meta = fullMetadata.map { case (k, v) => (prefix + k, v) }
-    if (meta.nonEmpty) {
-      // list the files BEFORE the marker lands: `paths` runs the
-      // marker-gated repair, which would otherwise clear the fresh
-      // marker (and scan for nothing) before the first rewrite
-      val ps = paths
-      // the marker lands BEFORE the first rewrite (a crash anywhere in
-      // the loop is covered by the gated restore) but ONLY when a rewrite
-      // will actually run — an empty-metadata call must not tax every
-      // future mutating op with the recursive restore scan for nothing.
-      // It carries OUR process token; liveness is a TIME-based heartbeat
-      // (stale/4 cadence), not a per-file re-stamp — a single huge file's
-      // byte copy on slow storage can exceed the staleness window, and a
-      // between-files stamp would let a foreign process "repair" this
-      // live embed mid-copy (restore the in-flight .kvbak over the
-      // half-written target), exactly the race the ownership gate closes.
-      writeFooterMarker()
-      val beat = new FileHeartbeat(fs, mp, TableRepo.ProcessToken,
-        TableRepo.FooterMarkerStaleMs, "graft-footer-marker-heartbeat")
-      try {
-        val conf = spark.sparkContext.hadoopConfiguration
-        ps.foreach(p => ParquetMeta.embed(conf, new Path(p), meta))
-      } finally beat.stop()
-      // every per-file swap completed and deleted its backup — clearing
-      // the marker here (and in repairFooterRewrites after a clean
-      // restore) keeps it scoped to crash windows, so the read-path
-      // repair gate costs one exists() in steady state
-      fs.delete(mp, false): Unit
-    }
-  }
-
-  /** Sentinel telling mutating ops this repo has footer-rewritten files
-    * (so the backup-restore scan is worth its recursive listing).
-    */
-  private def footerRewriteMarker: String = s"$root/_graft_footer_rewrites"
-
-  /** Crash repair for [[ParquetMeta.embed]]'s swap window: a crash after
-    * the stage-aside rename leaves the data file only under its invisible
-    * `.kvbak` name — reads silently miss its rows until it is restored,
-    * and a full rewrite would then LOSE them. Restores every orphaned
-    * backup (original missing) and drops superseded ones (original
-    * present: the crash was after the swap completed, the backup is the
-    * pre-rewrite copy). Runs at the head of [[embedMetadata]] and — for
-    * repos whose footer-rewrite marker exists, i.e. where .kvbak
-    * artifacts are possible at all — of every mutating op (inside the
-    * write lock), same pattern as the pending-delete replay.
-    */
-  private def restoreFooterBackups(): Unit = {
-    val dp = new Path(dataPath)
-    if (fs.exists(dp)) {
-      val it = fs.listFiles(dp, true)
-      while (it.hasNext) {
-        val f = it.next().getPath
-        val n = f.getName
-        if (n.startsWith(".") && n.endsWith(".kvbak")) {
-          val orig = new Path(f.getParent, n.stripPrefix(".").stripSuffix(".kvbak"))
-          if (!fs.exists(orig)) {
-            if (!fs.rename(f, orig))
-              throw new java.io.IOException(s"failed to restore footer-rewrite backup $f")
-          } else fs.delete(f, false): Unit
-        } else if (n.startsWith(".") && n.endsWith(".kvtmp")) {
-          // a half-written rewrite temp is garbage either way
-          fs.delete(f, false): Unit
+    if (meta.nonEmpty && exists) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      commitNewVersion({ target =>
+        // the copy plan lists INSIDE the guarded callback, after the
+        // claim, like compact's: the guard's re-lists vouch for this set
+        val src = dataPath
+        val q = fs.makeQualified(new Path(src)).toString
+        val pend = invisibleFiles()
+        relativeFiles(src).filterNot(r => pend.contains(s"$q/$r")).foreach { r =>
+          ParquetMeta.embed(conf, new Path(s"$src/$r"), new Path(s"$target/$r"), meta)
         }
-      }
+      }, guardSource = true)
     }
   }
 }
 
 object TableRepo {
-  /** This JVM's identity for crash-artifact ownership (footer-rewrite
-    * markers; writer leases use a per-acquisition id derived from it).
-    * Every writer of those files holds the per-root write monitor, so a
-    * marker carrying OUR token seen while WE hold the monitor has no
-    * live owner — its embed crashed or threw — and repair is immediate.
-    * A foreign token means another process: live-vs-crashed is decided
-    * by heartbeat age, never guessed.
+  /** This JVM's identity: the prefix of every version-claim and
+    * writer-lease holder id (each acquisition appends its own UUID), so a
+    * claim or lease file names the process that holds it.
     */
   private[repo] val ProcessToken: String = java.util.UUID.randomUUID().toString
-
-  /** Age past which a FOREIGN footer-rewrite marker counts as a crash
-    * leftover. A live embed keeps the marker fresh with a TIME-based
-    * [[FileHeartbeat]] (every quarter of this), so staleness is
-    * independent of per-file rewrite duration — a single huge file's
-    * byte copy on slow storage must not hand a foreign process a
-    * "repair" of a live embed. Until stale, foreign processes leave the
-    * marker alone: reads proceed un-repaired (missing at most the one
-    * file mid-swap), mutating ops fail loudly.
-    */
-  private[repo] val FooterMarkerStaleMs: Long = 5L * 60 * 1000
 
   /** Cap on the OR-of-literals partition filter in `replaceRecords` —
     * above this the merge uses a distributed semi-join instead.

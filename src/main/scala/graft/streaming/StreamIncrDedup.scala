@@ -32,8 +32,9 @@ import graft.repo.TableRepo
   * already landed.
   *
   * `pruned = true` routes the probe through the footer-pruned
-  * `readWhereIn` path (index clustered by fp; see PruneStudy) — at a
-  * large index the probe reads O(batch) files, not O(index).
+  * `readWhereIn` path (index clustered by fp; see PruneStudy in
+  * SCALE.md "Retired measurement mains") — at a large index the probe
+  * reads O(batch) files, not O(index).
   */
 object StreamIncrDedup {
 

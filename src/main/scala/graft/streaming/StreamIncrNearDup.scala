@@ -48,8 +48,9 @@ object StreamIncrNearDup {
     * compaction is also what keeps the candidate-pruned verify sharp —
     * it re-clusters the text repo into disjoint doc_id ranges, so the
     * needle read stays a strict file subset as the corpus grows (the
-    * NearDupPruneStudy cadence). A crashed compaction is invisible
-    * (snapshot-isolated) and retried at the next trigger point.
+    * NearDupPruneStudy cadence, SCALE.md "Retired measurement mains").
+    * A crashed compaction is invisible (snapshot-isolated) and retried
+    * at the next trigger point.
     */
   def start(
       stream: DataFrame,

@@ -108,7 +108,7 @@ ROWS = [
      spec("ObjIngestorSpec")),
     ("A26", "custom table metadata (sidecar + footer KV)", "ScalaTest-covered",
      line_of("src/main/scala/graft/repo/ParquetMeta.scala", r"object ParquetMeta|def embed"),
-     spec("ParquetMetaSpec", "FooterMarkerSpec")),
+     spec("ParquetMetaSpec")),
     ("A27", "environments", qcell("q_env_switch"),
      line_of(TR, r"def envCtx"), spec("TableRepoSpec")),
     ("A28", "metadata-only count", qcell("q_count"), qline("q_count"), spec("QueriesSpec")),
