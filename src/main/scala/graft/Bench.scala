@@ -236,21 +236,11 @@ object Bench {
     val queryList = queries.toSeq
     val times = Array.fill(queryList.size)(scala.collection.mutable.ArrayBuffer.empty[Double])
     val fails = Array.fill[Option[Throwable]](queryList.size)(None)
-    // Experiment knobs for decomposing harness cost from plan cost
-    // (SCALE.md "Measurement noise"): mode=consecutive re-runs each
-    // query's reps back-to-back (the pre-r8 warm-block subsidy);
-    // nockpt=1 disables the Ckpt barriers, paying recomputation of
-    // shared stages instead of materialization — quantifying what the
-    // checkpoint floor costs at this SF.
-    val consecutive = sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("consecutive")
-    val noCkpt = sys.env.get("SPARK_GRAFT_BENCH_NOCKPT").contains("1")
     def runOnce(qi: Int, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         timed: Boolean = true): Unit = {
       val t0 = System.nanoTime()
-      try {
-        if (noCkpt) graft.ops.Ckpt.withDisabled(fn(spark, sfDir).count())
-        else fn(spark, sfDir).count()
-      } catch { case e: Throwable => fails(qi) = fails(qi).orElse(Some(e)) }
+      try fn(spark, sfDir).count()
+      catch { case e: Throwable => fails(qi) = fails(qi).orElse(Some(e)) }
       if (timed) times(qi) += (System.nanoTime() - t0) / 1e9
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
@@ -260,7 +250,6 @@ object Bench {
     // first-rep inflation (q_minhash_est [11.98, 2.65, 1.62]) that three
     // clean re-runs at the same HEAD didn't reproduce. Paying one extra
     // sweep keeps the MEDIAN honest with only 3 timed reps.
-    val warmRep = !sys.env.get("SPARK_GRAFT_BENCH_NOWARM").contains("1")
     // Per-sweep box-state samples make the artifact self-adjudicating
     // against external load (round 15 needed cross-run archaeology to
     // clear a 19% "regression" that was an external load cycle): each
@@ -273,23 +262,20 @@ object Bench {
       sweepLoad += java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
     }
-    if (warmRep) {
-      sampleSweep()
-      queryList.zipWithIndex.foreach { case ((_, fn), qi) => runOnce(qi, fn, timed = false) }
-      System.gc()
-    }
+    sampleSweep()
+    queryList.zipWithIndex.foreach { case ((_, fn), qi) => runOnce(qi, fn, timed = false) }
+    System.gc()
     // PRE-FLIGHT LOAD GATE (bounded): the one-shot official artifact
     // inherits whatever load cycle it hits — r17's official landed at
     // 1.18x its own floor behind 57 stall re-runs. Before the timed
-    // sweeps, wait (up to gate_max_sec, default 5 min) for the 1-min
-    // loadavg to drop below the threshold; the wait and the load seen
-    // are recorded in the artifact, so a number taken on a busy box
-    // machine-explains itself. The gate sits AFTER the untimed warm rep
+    // sweeps, wait (up to 5 min) for the 1-min loadavg to drop below
+    // 3.0; the wait and the load seen are recorded in the artifact, so a
+    // number taken on a busy box machine-explains itself. The gate sits AFTER the untimed warm rep
     // (which doubles as useful work while the box is busy).
     def loadavg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    val gateMaxSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_MAX_SEC", "300").toLong
-    val gateThresh = sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_LOAD", "3.0").toDouble
+    val gateMaxSec = 300L
+    val gateThresh = 3.0
     val gateStartLoad = loadavg
     val gateT0 = System.nanoTime()
     while (loadavg >= gateThresh && (System.nanoTime() - gateT0) / 1e9 < gateMaxSec) {
@@ -298,30 +284,21 @@ object Bench {
     }
     val gateWaitSec = ((System.nanoTime() - gateT0) / 1e9).toLong
     val gateEndLoad = loadavg
-    if (consecutive) {
-      // per-rep-group samples so consecutive mode's sweep_load attributes
-      // load to each query's block, like roundrobin's per-sweep samples
-      queryList.zipWithIndex.foreach { case ((_, fn), qi) =>
-        sampleSweep()
-        for (_ <- 1 to reps) runOnce(qi, fn); System.gc()
-      }
-    } else
-      for (_ <- 1 to reps) {
-        sampleSweep()
-        queryList.zipWithIndex.foreach { case ((_, fn), qi) => runOnce(qi, fn) }
-        System.gc()
-      }
+    for (_ <- 1 to reps) {
+      sampleSweep()
+      queryList.zipWithIndex.foreach { case ((_, fn), qi) => runOnce(qi, fn) }
+      System.gc()
+    }
     // STALL RERUN: the harness already detects a box stall (one raw rep
     // >= 3x the query's fastest), but a SWEEP-WIDE load cycle stalls
     // several reps of many queries, and one extra rep cannot flip a
     // dropminmax median whose kept set is majority-stalled — r17's
     // official artifact ran 57 single re-runs and still landed 1.18x its
-    // own floor. Re-runs are now MULTI-PASS (default 3, env
-    // SPARK_GRAFT_BENCH_RERUN_PASSES): each pass adds one rep to every
-    // query whose dropminmax MEDIAN is still inflated past 1.5x its own
-    // raw floor (with a 0.25 s absolute guard so sub-second queries
-    // don't spin), then the SAME official metric runs over the final rep
-    // set. Convergence is honest, not optimistic: the added reps are
+    // own floor. Re-runs are now MULTI-PASS (3 passes): each pass adds
+    // one rep to every query whose dropminmax MEDIAN is still inflated
+    // past 1.5x its own raw floor (with a 0.25 s absolute guard so
+    // sub-second queries don't spin), then the SAME official metric runs
+    // over the final rep set. Convergence is honest, not optimistic: the added reps are
     // real executions on the current box — a genuinely slow query stays
     // slow through every pass; only load-cycle victims recover.
     // `stall_reruns` counts all extra reps; the closing `stalls` scalar
@@ -344,7 +321,7 @@ object Bench {
         med / ts.min >= 1.5 && med - ts.min > 0.25
       }
     }
-    val rerunPasses = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_PASSES", "3").toInt
+    val rerunPasses = 3
     var stallReruns = 0
     var pass = 0
     var rerun = queryList.indices.filter(qi => isStalled(qi) || medianInflated(qi))
@@ -408,9 +385,8 @@ object Bench {
     // fold this run's raw minima into the durable record and surface the
     // cross-run best floor as a first-class headline — the only number
     // that survives a constant-load day (see the record block above). Only a
-    // FULL production-mode run folds: subset/experiment floors are not
-    // inventory-complete or not plan-comparable.
-    val official = only.isEmpty && !consecutive && !noCkpt
+    // FULL inventory run folds: subset floors are not inventory-complete.
+    val official = only.isEmpty
     val runMins: Map[String, Double] = queryList.zipWithIndex.flatMap {
       case ((name, _), qi) => if (fails(qi).isEmpty) times(qi).minOption.map(name -> _) else None
     }.toMap
@@ -428,12 +404,7 @@ object Bench {
     val okTimes = results.map(_._2).filter(_ >= 0)
     val total = if (okTimes.nonEmpty) okTimes.sum else 0.0
     val nFail = results.map(_._2).count(_ < 0)
-    // consecutive mode samples once per QUERY's rep block, so its
-    // sweep_ts/sweep_load attribute load per query rather than per
-    // round-robin sweep — the mode string says which
-    val mode = (if (consecutive) "consecutive(sweeps=warm,per-query,end)" else "roundrobin") +
-      (if (warmRep) "+warm" else "") + (if (reps >= 4) "+dropminmax" else "") +
-      (if (noCkpt) "+nockpt" else "")
+    val mode = "roundrobin+warm" + (if (reps >= 4) "+dropminmax" else "")
     // TWO renditions of the same run:
     //  - `line` (the artifact files): everything — per-rep arrays, raw
     //    reps, per-query floors, sweep load samples — the self-diagnosing
@@ -461,10 +432,9 @@ object Bench {
     // all-queries artifact each round
     Files.createDirectories(Paths.get("target"))
     Files.write(Paths.get("target/bench.json"), (line + "\n").getBytes("UTF-8"))
-    // only a FULL run in the production harness mode may replace the
-    // committed artifact — a targeted subset or experiment run must not
-    // clobber the round's all-queries record
-    if (only.isEmpty && !consecutive && !noCkpt) {
+    // only a FULL inventory run may replace the committed artifact — a
+    // targeted subset run must not clobber the round's all-queries record
+    if (official) {
       Files.createDirectories(Paths.get("docs"))
       Files.write(Paths.get("docs/bench_last.json"), (line + "\n").getBytes("UTF-8"))
     }

@@ -11,7 +11,9 @@ import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.SparkSession
 
 /** Per-FILE column min/max from Parquet footer metadata — the statistics
-  * layer under file-granularity merge pruning ([[TableRepo.replaceRecordsPruned]]).
+  * layer under TableRepo's footer-range join, which prunes both the
+  * file-granularity upsert ([[TableRepo.replaceRecordsPruned]]) and the
+  * point-lookup read ([[TableRepo.readWhereIn]]).
   *
   * Lakehouse formats (Delta/Iceberg) keep these ranges in a manifest; a
   * bare-Parquet repo has exactly the same information in every file's
@@ -53,11 +55,6 @@ object FileStats {
       .map(f => (f, rangesOf(conf.value, f, cols)))
       .collect().toSeq
   }
-
-  /** Single-column convenience form. */
-  def columnRanges(spark: SparkSession, files: Seq[String], column: String)
-      : Seq[(String, Option[(Any, Any)])] =
-    columnRanges(spark, files, Seq(column)).map { case (p, m) => (p, m(column)) }
 
   /** Exact total row count of `files` from footer metadata only — what
     * sizing decisions (compaction's file-count math) need instead of a

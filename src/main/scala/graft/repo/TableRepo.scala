@@ -885,7 +885,7 @@ class TableRepo(
             // Backfill rewrite of all existing files (core.py:411-421).
             // Content-preserving, so the cross-process source guard
             // applies (the by-name plan lists after the version claim).
-            writeData(harmonize(readRaw(), widened), overwrite = true, guardSource = true)
+            writeData(harmonize(scan(), widened), overwrite = true, guardSource = true)
           }
           pinSchema(widened)
           widened
@@ -1054,14 +1054,15 @@ class TableRepo(
   private def partitionDirsOf(rels: Seq[String]): Seq[String] =
     rels.collect { case r if r.contains('/') => r.substring(0, r.lastIndexOf('/')) }.distinct
 
-  /** Reader-visible data files under `dirs` — the retire set of a
-    * partition replacement. Invisible files (a crashed exactly-once
-    * batch's landed prefix) are never retired: its replay still needs
-    * them.
+  /** Reader-visible data files under `dirs` of the current version `cur`
+    * — the retire set of a partition replacement, the pruned upsert's
+    * candidates and [[paths]]. Hidden files ([[hiddenFiles]]) are never
+    * retired or merged: an uncommitted exactly-once batch's replay still
+    * needs its landed prefix.
     */
-  private def visibleFilesUnder(dirs: Seq[String]): Seq[String] = {
-    val invisible = invisibleFiles()
-    dirs.flatMap(listParquetFiles).distinct.filterNot(invisible.contains)
+  private def visibleFilesUnder(cur: String, dirs: Seq[String]): Seq[String] = {
+    val hidden = hiddenFiles(cur, current = true)
+    dirs.flatMap(listParquetFiles).distinct.filterNot(hidden.contains)
   }
 
   /** Remove the dirs under `target` that retiring `files` left empty,
@@ -1327,19 +1328,19 @@ class TableRepo(
   def compact(targetRecordsPerFile: Long): Unit = withWriteLock {
     replayPendingDeletes()
     // sizing only (`parts` below): an exact count from parquet footer
-    // metadata over the same visible-file set readRaw() would scan — no
+    // metadata over the same visible-file set scan() reads — no
     // table-scan job (at a 100 TB table the scan-count alone would cost
     // a full pass before the rewrite even starts)
-    val n = metadataRowCount()
+    val n = FileStats.rowCount(spark, paths)
     if (n == 0) return
     val parts = math.max(1L, (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
     // the whole content plan is constructed INSIDE the guarded callback —
     // after the version claim — so its parquet listing is one the guard's
     // re-list can vouch for (`n`/`parts` above are sizing hints only)
     commitNewVersion({ target =>
-      // readLayout surfaces the bucket column from the partition DIRECTORIES
-      // (free) instead of re-running md5 over every row
-      val base = readLayout()
+      // the layout scan surfaces the bucket column from the partition
+      // DIRECTORIES (free) instead of re-running md5 over every row
+      val base = scan(layout = true)
       // partitioned layouts rebalance BY the layout cols so each partition
       // dir is written by one task (round-robin would cross every task with
       // every dir: parts x dirs small files — the opposite of compaction)
@@ -1379,7 +1380,7 @@ class TableRepo(
     require(groupCols.nonEmpty, "replaceGroups requires group columns")
     val schema = resolveSchema(df)
     landThenRetire(harmonize(df, schema), "replaceGroups")((target, rels) =>
-      visibleFilesUnder(partitionDirsOf(rels).map(d => s"$target/$d")))
+      visibleFilesUnder(target, partitionDirsOf(rels).map(d => s"$target/$d")))
   }
 
   /** Drop duplicate keys keeping the first occurrence in batch order
@@ -1439,7 +1440,7 @@ class TableRepo(
       // recomputed from the key column (pure function) on the update side —
       // so the whole merge is scoped to bucket partitions exactly like a
       // user-grouped repo is scoped to its group dirs.
-      val existing = readLayout()
+      val existing = scan(layout = true)
       // The update set is read by the scope computation, the anti-join, and
       // the final union — materialize its (small, bounded-by-caller) rows
       // once instead of re-running the dedup window per consumer.
@@ -1516,7 +1517,7 @@ class TableRepo(
             if (unwritten.isEmpty) Nil
             else dirsRead(existing.filter(inPartitions(unwritten)).select(input_file_name()))
           }
-        visibleFilesUnder(written.map(d => s"$target/$d") ++ emptiedDirs)
+        visibleFilesUnder(target, written.map(d => s"$target/$d") ++ emptiedDirs)
       }
     }
   }
@@ -1528,8 +1529,7 @@ class TableRepo(
     * file a narrow key range (`repartitionByRange` +
     * `sortWithinPartitions`), so the merge only needs the files whose
     * footer per-key-column [min,max] boxes intersect an update key tuple
-    * ([[FileStats.columnRanges]] — one distributed metadata job, all key
-    * columns from one footer read). Untouched files are never read and
+    * ([[filesMeeting]]). Untouched files are never read and
     * never rewritten — they stay byte-identical on disk (asserted in
     * `FilePrunedUpsertSpec`). At 100 TB this is the difference between
     * rewriting a table and rewriting the handful of files a trickle of
@@ -1543,12 +1543,8 @@ class TableRepo(
     * shapes must use `replaceRecords`: an unscoped key's old row may live
     * outside the updates' partitions.
     *
-    * Files without usable key statistics are conservatively treated as
-    * affected — pruning never depends on stats presence. NaN float/double
-    * update keys disable footer pruning for the batch (NaN satisfies no
-    * range predicate; Spark's join equality does match NaN to NaN, so the
-    * merge itself stays correct), and NaN-poisoned footer bounds are
-    * discarded by [[FileStats]].
+    * Footer pruning is [[filesMeeting]]: files without usable key
+    * statistics are always affected and NaN update keys disable pruning.
     *
     * Sequencing: the shared in-place protocol ([[landThenRetire]]) with
     * the affected files as the retire set — the merged replacement files
@@ -1571,11 +1567,6 @@ class TableRepo(
     replayPendingDeletes()
     require(keyCols.nonEmpty, "file-pruned upsert requires keyCols")
     val schema = resolveSchema(updates)
-    val keyTypes = keyCols.map(k => k -> schema(k).dataType)
-    keyTypes.foreach { case (k, dt) =>
-      require(Seq(IntegerType, LongType, FloatType, DoubleType, StringType).contains(dt),
-        s"file-pruned upsert supports int/long/float/double/string keys, got $dt for $k")
-    }
     val effKeys = if (byGroups && groupCols.nonEmpty) (groupCols ++ keyCols).distinct else keyCols
     require(layoutCols.isEmpty || ((byGroups || groupCols.isEmpty) &&
         hashBucket.forall(hb => effKeys.contains(hb.col))),
@@ -1606,111 +1597,81 @@ class TableRepo(
           // merge handles it
           replaceRecords(updates, byGroups); return
         }
-        // same invisible-file exclusion as `paths`: a crashed exactly-once
-        // batch's landed prefix (uncommitted — must not be merged into
-        // visible replacement files and deleted out from under its replay)
-        // and a crashed pruned merge's doomed files must never be
-        // candidates here either
-        val invisible = invisibleFiles()
-        dirVals.toIndexedSeq.flatMap { vals =>
-          val dir = layoutCols.zip(vals)
-            .map { case (c, v) => TableRepo.dirSegment(c, v) }.mkString("/")
-          listParquetFiles(s"$dataPath/$dir").filterNot(invisible.contains)
-        }
+        val cur = dataPath
+        visibleFilesUnder(cur, dirVals.toIndexedSeq.map { vals =>
+          cur + "/" + layoutCols.zip(vals).map { case (c, v) => TableRepo.dirSegment(c, v) }
+            .mkString("/")
+        })
       }
-    // 2) footer pruning: broadcast the (one-row-per-file) range boxes and
-    //    join the distinct update key tuples into them — no driver pass
-    //    over update rows; the collected result is bounded by file count
-    val nanKeyCols = keyTypes.collect { case (k, FloatType | DoubleType) => k }
-    val updatesHaveNanKey = nanKeyCols.nonEmpty &&
-      u.filter(nanKeyCols.map(k => isnan(col(k))).reduce(_ || _)).limit(1).count() > 0
-    val affected: Seq[String] =
-      if (updatesHaveNanKey) candidateFiles // NaN satisfies no range predicate
-      else if (candidateFiles.isEmpty) Nil
-      else {
-        val ranges = FileStats.columnRanges(spark, candidateFiles, keyCols)
-        val statless = ranges.collect { case (p, m) if keyCols.exists(k => m(k).isEmpty) => p }
-        val rangeRows = new java.util.ArrayList[Row]()
-        ranges.foreach { case (p, m) =>
-          if (keyCols.forall(k => m(k).isDefined))
-            rangeRows.add(Row.fromSeq(p +: keyCols.flatMap { k =>
-              val (lo, hi) = m(k).get; Seq(lo, hi)
-            }))
-        }
-        val rangesDf = spark.createDataFrame(rangeRows,
-          StructType(StructField("__graft_file__", StringType) +:
-            keyTypes.flatMap { case (k, dt) =>
-              Seq(StructField(s"__graft_min_${k}__", dt), StructField(s"__graft_max_${k}__", dt))
-            }))
-        val cond = keyCols.map(k =>
-          col(k) >= col(s"__graft_min_${k}__") && col(k) <= col(s"__graft_max_${k}__"))
-          .reduce(_ && _)
-        u.select(keyCols.map(col): _*).distinct()
-          .join(broadcast(rangesDf), cond)
-          .select(col("__graft_file__")).distinct()
-          .collect().map(_.getString(0)).toIndexedSeq ++ statless
-      }
+    // 2) footer pruning within the candidates
+    val affected = filesMeeting(u, keyCols, candidateFiles)
     if (affected.isEmpty) {
       // no existing file can hold any updated key: the batch is all-new
       // keys, and an upsert of new keys is a plain append
       writeData(u, overwrite = false)
     } else {
-      val merged = stage(readFilesScoped(affected)
+      val merged = stage(scan(files = Some(affected))
         .join(u.select(effKeys.map(col): _*).distinct(), effKeys, "left_anti")
         .unionByName(u))
       landThenRetire(merged, "replaceRecordsPruned")((_, _) => affected)
     }
   }
 
-  /** Read an explicit data-file subset with the repo's harmonized row
-    * surface: basePath keeps dir-encoded partition values visible (group
-    * columns in drop mode), helper partition columns never leak.
+  /** The one footer-range join: the files of `candidates` whose footer
+    * [min,max] box on every column of `cols` can hold at least one tuple
+    * of `needles` — one footer read per file ([[FileStats.columnRanges]],
+    * all columns at once), the range boxes broadcast and the distinct
+    * needle tuples joined into them, so there is no driver pass over
+    * needle rows and the collected result is bounded by file count.
+    * Files without usable stats on any of `cols` always qualify
+    * (pruning correctness never depends on stats presence), and a NaN
+    * needle returns every candidate — NaN satisfies no range predicate,
+    * while Spark's join equality does match NaN to NaN.
     */
-  private def readFilesScoped(files: Seq[String]): DataFrame =
-    pinnedSchema match {
-      case Some(p) =>
-        harmonize(
-          spark.read.schema(p).option("basePath", dataPath).parquet(files: _*), p)
-      case None =>
-        spark.read.option("basePath", dataPath).parquet(files: _*).drop(helperCols: _*)
+  private def filesMeeting(needles: DataFrame, cols: Seq[String],
+      candidates: Seq[String]): Seq[String] = {
+    val types = cols.map(c => c -> needles.schema(c).dataType)
+    types.foreach { case (c, dt) =>
+      require(Seq(IntegerType, LongType, FloatType, DoubleType, StringType).contains(dt),
+        s"footer pruning supports int/long/float/double/string, got $dt for $c")
     }
-
-  /** Files whose footer [min,max] box on `column` can hold at least one
-    * value of `needles` — the read-side twin of the pruned upsert's
-    * affected-file computation: one distributed footer job over the file
-    * list, needle boxes broadcast, the collected result bounded by file
-    * count. Files without usable stats are always candidates (pruning
-    * correctness never depends on stats presence); NaN needles disable
-    * pruning for the same reason the pruned upsert does — NaN satisfies
-    * no range predicate.
-    */
-  def prunedFilesFor(needles: DataFrame, column: String): Seq[String] = {
-    val dt = needles.schema(column).dataType
-    require(Seq(IntegerType, LongType, FloatType, DoubleType, StringType).contains(dt),
-      s"footer pruning supports int/long/float/double/string, got $dt for $column")
-    val all = paths
-    if (all.isEmpty) return Nil
-    val nanNeedles = Seq(FloatType, DoubleType).contains(dt) &&
-      needles.filter(isnan(col(column))).limit(1).count() > 0
-    if (nanNeedles) return all
-    val ranges = FileStats.columnRanges(spark, all, column)
-    val statless = ranges.collect { case (p, None) => p }
+    if (candidates.isEmpty) return Nil
+    val nanCols = types.collect { case (c, FloatType | DoubleType) => c }
+    if (nanCols.nonEmpty &&
+        needles.filter(nanCols.map(c => isnan(col(c))).reduce(_ || _)).limit(1).count() > 0)
+      return candidates
+    val ranges = FileStats.columnRanges(spark, candidates, cols)
+    val statless = ranges.collect { case (p, m) if cols.exists(c => m(c).isEmpty) => p }
     val rangeRows = new java.util.ArrayList[Row]()
-    ranges.foreach { case (p, r) => r.foreach { case (lo, hi) => rangeRows.add(Row(p, lo, hi)) } }
+    ranges.foreach { case (p, m) =>
+      if (cols.forall(c => m(c).isDefined))
+        rangeRows.add(Row.fromSeq(p +: cols.flatMap { c => val (lo, hi) = m(c).get; Seq(lo, hi) }))
+    }
     val rangesDf = spark.createDataFrame(rangeRows,
-      StructType(Seq(StructField("__graft_file__", StringType),
-        StructField("__graft_min__", dt), StructField("__graft_max__", dt))))
-    needles.select(col(column)).distinct()
-      .join(broadcast(rangesDf),
-        col(column) >= col("__graft_min__") && col(column) <= col("__graft_max__"))
+      StructType(StructField("__graft_file__", StringType) +: types.flatMap { case (c, dt) =>
+        Seq(StructField(s"__graft_min_${c}__", dt), StructField(s"__graft_max_${c}__", dt))
+      }))
+    val cond = cols.map(c =>
+      col(c) >= col(s"__graft_min_${c}__") && col(c) <= col(s"__graft_max_${c}__")).reduce(_ && _)
+    needles.select(cols.map(col): _*).distinct()
+      .join(broadcast(rangesDf), cond)
       .select(col("__graft_file__")).distinct()
       .collect().map(_.getString(0)).toIndexedSeq ++ statless
   }
 
+  /** Files whose footer [min,max] box on `column` can hold at least one
+    * value of `needles` — [[filesMeeting]] over the visible files
+    * ([[paths]]).
+    */
+  def prunedFilesFor(needles: DataFrame, column: String): Seq[String] =
+    filesMeeting(needles, Seq(column), paths)
+
   /** Footer-pruned point-lookup read: rows whose `column` value appears
     * in `needles`, scanning ONLY the files whose footer range intersects
-    * the needle set. On a repo CLUSTERED by `column` (`clusterCols`/
-    * `zOrderCols` keep every file's range narrow) a small needle set
+    * the needle set ([[prunedFilesFor]], then one [[scan]] of that
+    * subset — the same schema and row surface as [[getFullDf]]). On a
+    * repo CLUSTERED by `column` (`clusterCols`/`zOrderCols` keep every
+    * file's range narrow) a small needle set
     * touches a small file subset — the bare-Parquet equivalent of an
     * Iceberg/Delta data-skipping point lookup, and the scale path for
     * probing a large persisted index with a small batch: the probe cost
@@ -1721,7 +1682,7 @@ class TableRepo(
   def readWhereIn(needles: DataFrame, column: String): DataFrame = {
     val files = prunedFilesFor(needles, column)
     if (files.isEmpty) getFullDf.limit(0)
-    else readFilesScoped(files)
+    else scan(files = Some(files))
       .join(needles.select(col(column)).distinct(), Seq(column), "left_semi")
   }
 
@@ -1756,87 +1717,73 @@ class TableRepo(
 
   def exists: Boolean = fs.exists(new Path(dataPath))
 
-  /** Exact row count from parquet footers over the same visible-file set
-    * [[readRaw]] scans (pending-delete and landed-prefix exclusions
-    * applied) — metadata-only, no table scan. Row counts in footers are
-    * exact by the parquet spec, so this equals `count()` always.
-    */
-  private def metadataRowCount(): Long = {
-    if (!exists) return 0L
-    val pend = invisibleFiles()
-    FileStats.rowCount(spark, listParquetFiles(dataPath).filterNot(pend.contains))
-  }
-
   /** Recreate the data directory — the writer retry path calls this when a
     * flush found the directory racily deleted (core.py:488-497 analog).
     */
   def mkdirs(): Unit = { fs.mkdirs(new Path(dataPath)): Unit }
 
-  /** Raw scan. With a pinned schema the read skips Parquet schema
-    * inference entirely (no footer-merge job — at scale that's a pass over
-    * every file's metadata); files always hold harmonized columns, and
-    * partition-directory values are decoded as the pinned types instead of
-    * inference. Without a pin (first contact with a foreign dataset) fall
-    * back to a merged-schema inference read.
+  /** The one Parquet scan behind every repo data read. `dir` is a
+    * committed version dir (default: the current one, resolved once here).
+    *
+    * Schema: the current version reads under the pinned schema, a grace
+    * version under the schema it was SEALED with (falling back to the pin
+    * for dirs superseded before sealing existed). A pinned read skips
+    * Parquet schema inference entirely (no footer-merge job — at scale
+    * that's a pass over every file's metadata) and decodes
+    * partition-directory values as the pinned types; without a pin (first
+    * contact with a foreign dataset) the read infers a merged schema.
+    *
+    * File set: `files` when given (a subset of the visible listing, as
+    * [[readWhereIn]] and the pruned upsert pass); else the dir itself when
+    * [[hiddenFiles]] is empty, or its listing minus the hidden files.
+    * Explicit lists read with `basePath`, so dir-encoded partition values
+    * stay visible.
+    *
+    * `layout = true` also surfaces the derived layout columns — the hash
+    * bucket and the keep-mode group helpers — read from the partition
+    * DIRECTORIES (free), typed from the schema so they compare cleanly
+    * against recomputed update-side values; the merge and bucket-scoped
+    * reads filter on them so Catalyst prunes directories. Without a pin
+    * they are recomputed from their source columns like the write path:
+    * partition-column inference would read a zero-padded bucket dir value
+    * like "03" as integer 3, and a later unionByName would coerce it to
+    * "3" — a silent duplicate-dir corruption.
+    *
+    * The result is harmonized to the schema (partition-directory type
+    * inference and file-level schema drift never leak to callers); helper
+    * layout columns surface only with `layout = true`.
     */
-  private def readRaw(): DataFrame = {
-    val rd = pinnedSchema match {
-      case Some(p) => spark.read.schema(p)
-      case None    => spark.read.option("mergeSchema", "true")
+  private def scan(dir: Option[String] = None, files: Option[Seq[String]] = None,
+      layout: Boolean = false): DataFrame = {
+    val cur = dataPath
+    val path = dir.getOrElse(cur)
+    val current = path == cur
+    val schema = if (current) pinnedSchema else sealedSchema(path).orElse(pinnedSchema)
+    def read(rd: org.apache.spark.sql.DataFrameReader): DataFrame = {
+      val explicit = files.orElse {
+        val hidden = hiddenFiles(path, current)
+        if (hidden.isEmpty) None else Some(listParquetFiles(path).filterNot(hidden.contains))
+      }
+      explicit.fold(rd.parquet(path))(fl => rd.option("basePath", path).parquet(fl: _*))
     }
-    val pend = invisibleFiles()
-    if (pend.isEmpty) rd.parquet(dataPath)
-    else
-      // a crashed pruned merge left replaced-but-undeleted files, or a
-      // crashed exactly-once batch left a landed prefix: exclude both
-      // (basePath keeps dir-encoded partition values visible)
-      rd.option("basePath", dataPath)
-        .parquet(listParquetFiles(dataPath).filterNot(pend.contains): _*)
-  }
-
-  /** Harmonized scan that also surfaces the derived layout columns — the
-    * hash bucket and the keep-mode group helpers — read from the partition
-    * DIRECTORIES (free), typed from the pinned schema so they compare
-    * cleanly against recomputed update-side values. The merge and
-    * bucket-scoped reads filter on them so Catalyst prunes directories.
-    */
-  private def readLayout(): DataFrame =
-    if (helperCols.isEmpty) getFullDf
-    else pinnedSchema match {
+    schema match {
       case Some(p) =>
-        val withH = StructType(p.fields ++
+        val target = if (!layout) p else StructType(p.fields ++
           grpHelpers.map { case (c, h) => StructField(h, p(c).dataType) } ++
           bucketColName.map(b => StructField(b, StringType)))
-        // same invisible-file exclusion as readRaw: a crashed pruned
-        // merge's doomed files and a crashed exactly-once batch's landed
-        // prefix must be invisible to layout reads too
-        val pend = invisibleFiles()
-        val rd = spark.read.schema(withH)
-        val base =
-          if (pend.isEmpty) rd.parquet(dataPath)
-          else rd.option("basePath", dataPath)
-            .parquet(listParquetFiles(dataPath).filterNot(pend.contains): _*)
-        harmonize(base, withH)
+        harmonize(read(spark.read.schema(target)), target)
       case None =>
-        // no pin (foreign data / deleted sidecar): partition-column type
-        // inference would read a zero-padded bucket dir value like "03" as
-        // integer 3, and the later unionByName would coerce it to "3" — a
-        // silent duplicate-dir corruption. Drop the inferred columns and
-        // recompute them from their source columns like the write path.
-        withLayout(getFullDf)
+        val df = read(spark.read.option("mergeSchema", "true")).drop(helperCols: _*)
+        if (layout) withLayout(df) else df
     }
+  }
 
-  /** Full-table scan (core.py:169-175). One partition-aware Parquet scan;
-    * harmonized back to the pinned schema so partition-directory type
-    * inference, helper layout columns, and file-level schema drift never
-    * leak to callers.
-    */
+  /** Full-table scan (core.py:169-175): [[scan]] of the current version. */
   def getFullDf: DataFrame =
-    pinnedSchema match {
-      case Some(pinned) if !exists => spark.createDataFrame(new java.util.ArrayList[Row](), pinned)
-      case Some(pinned)            => harmonize(readRaw(), pinned)
-      case None if !exists         => throw new IllegalStateException(s"repo $root is empty")
-      case None                    => readRaw().drop(helperCols: _*)
+    if (exists) scan()
+    else pinnedSchema match {
+      case Some(pinned) => spark.createDataFrame(new java.util.ArrayList[Row](), pinned)
+      case None         => throw new IllegalStateException(s"repo $root is empty")
     }
 
   /** Committed snapshot versions on disk, oldest first: the current
@@ -1855,42 +1802,20 @@ class TableRepo(
     * columns; the current version reads like [[getFullDf]]. A caller can
     * diff the current state against the pre-rewrite snapshot — audit a
     * compact/replaceAll/backfill — without either read touching the
-    * other's files. Grace snapshots are sealed
-    * (full rewrites land in fresh dirs); only the CURRENT version can
-    * carry a crashed pruned-merge's pending deletes, so the exclusion is
-    * applied exactly when `version` resolves to it.
+    * other's files.
     */
   def getDfAt(version: Int): DataFrame = {
     val vs = committedVersions
     require(vs.contains(version),
       s"no committed snapshot data-v$version under $root (on disk: ${vs.mkString(", ")})")
-    val path = s"$root/data-v$version"
-    // PER-VERSION schema: a sealed (grace) snapshot reads under the
-    // schema it was superseded with, so time travel across an evolution
-    // backfill shows pre-evolution data WITHOUT the later columns. This
-    // is a Delta-style design choice layered on top of the reference's
-    // evolution contract (core.py:405-421 rewrites all data on extension
-    // — the reference has no snapshots, so it never faces the question);
-    // sealing keeps getDfAt consistent with what that version's readers
-    // saw. The live current version reads under the live pinned schema;
-    // unsealed old dirs (pre-sealing layouts) fall back to it too.
-    val schemaAt =
-      if (path == dataPath) pinnedSchema
-      else sealedSchema(path).orElse(pinnedSchema)
-    val rd = schemaAt match {
-      case Some(p) => spark.read.schema(p)
-      case None    => spark.read.option("mergeSchema", "true")
-    }
-    val pend =
-      if (path == dataPath) invisibleFiles() else pendingLandedFiles(path)
-    val base =
-      if (pend.isEmpty) rd.parquet(path)
-      else rd.option("basePath", path)
-        .parquet(listParquetFiles(path).filterNot(pend.contains): _*)
-    schemaAt match {
-      case Some(p) => harmonize(base, p)
-      case None    => base.drop(helperCols: _*)
-    }
+    // PER-VERSION schema ([[scan]]): a sealed (grace) snapshot reads
+    // under the schema it was superseded with, so time travel across an
+    // evolution backfill shows pre-evolution data WITHOUT the later
+    // columns — what that version's readers saw. A Delta-style choice
+    // layered on the reference's evolution contract (core.py:405-421
+    // rewrites all data on extension; it has no snapshots, so it never
+    // faces the question).
+    scan(dir = Some(s"$root/data-v$version"))
   }
 
   /** Row-level diff between two committed snapshots — the CDC/audit view
@@ -1932,7 +1857,7 @@ class TableRepo(
   def getPartitionDf(values: Map[String, Any]): DataFrame = {
     val needsLayout = values.keys.exists(c => physOf(c) != c) ||
       bucketColName.exists(values.contains)
-    val base = if (needsLayout) readLayout() else getFullDf
+    val base = if (needsLayout) scan(layout = true) else getFullDf
     val filtered = values.foldLeft(base) { case (d, (c, v)) => d.filter(col(physOf(c)) === lit(v)) }
     if (needsLayout) filtered.drop(helperCols: _*) else filtered
   }
@@ -1944,7 +1869,7 @@ class TableRepo(
   def getBucketDf(bucket: String): DataFrame = {
     val b = bucketColName.getOrElse(
       throw new IllegalStateException("getBucketDf requires a hashBucket layout"))
-    readLayout().filter(col(b) === lit(bucket)).drop(helperCols: _*)
+    scan(layout = true).filter(col(b) === lit(bucket)).drop(helperCols: _*)
   }
 
   /** Arbitrary per-group computation — the reference's `map_partitions`
@@ -1967,12 +1892,12 @@ class TableRepo(
       .flatMapGroups((k: String, it: Iterator[Row]) => f(k.split(sep).toSeq, it))(Encoders.row(out))
   }
 
-  /** All data file paths (core.py:260-265), minus any files a crashed
-    * pruned merge already replaced (pending-delete manifest).
+  /** All reader-visible data file paths (core.py:260-265): the current
+    * version's files minus [[hiddenFiles]].
     */
   def paths: Seq[String] = {
-    val pend = invisibleFiles()
-    listParquetFiles(dataPath).filterNot(pend.contains)
+    val cur = dataPath
+    visibleFilesUnder(cur, Seq(cur))
   }
 
   /** Every pending exactly-once manifest across this repo's writers:
@@ -2010,14 +1935,18 @@ class TableRepo(
       .toSet
   }
 
-  /** Files every reader of the CURRENT version must skip: a crashed
-    * pruned-merge's doomed files plus a crashed exactly-once batch's
-    * landed prefix.
+  /** Files every reader of version dir `dir` must skip: a crashed
+    * exactly-once batch's landed prefix, plus — when `dir` is the CURRENT
+    * version — a crashed mutation's pending deletes (their replacements
+    * are already landed). Grace versions are sealed: full rewrites land
+    * in fresh dirs and mutating ops replay pending deletes first, so only
+    * the current version can carry them.
     */
-  private def invisibleFiles(): Set[String] =
-    pendingDeleteSet() ++ pendingLandedFiles(dataPath)
+  private def hiddenFiles(dir: String, current: Boolean): Set[String] = {
+    val landed = pendingLandedFiles(dir)
+    if (current) pendingDeleteSet() ++ landed else landed
+  }
 
-  /** Recursive .parquet listing under `base` (no pending-delete filter). */
   /** Recursive .parquet listing that never descends into hidden child
     * dirs (`_temporary` committer state, dot-temps) and never returns
     * hidden files — the same visibility rule Spark's reads apply. The
@@ -2432,7 +2361,7 @@ class TableRepo(
   /** Row count — Catalyst answers this from Parquet footers (the reference's
     * metadata-only count, core.py:543-544).
     */
-  def count(): Long = if (exists) readRaw().count() else 0L
+  def count(): Long = if (exists) scan().count() else 0L
 
   // ------------------------------------------------------------ metadata
 
@@ -2483,8 +2412,8 @@ class TableRepo(
         // claim, like compact's: the guard's re-lists vouch for this set
         val src = dataPath
         val q = fs.makeQualified(new Path(src)).toString
-        val pend = invisibleFiles()
-        relativeFiles(src).filterNot(r => pend.contains(s"$q/$r")).foreach { r =>
+        val hidden = hiddenFiles(src, current = true)
+        relativeFiles(src).filterNot(r => hidden.contains(s"$q/$r")).foreach { r =>
           ParquetMeta.embed(conf, new Path(s"$src/$r"), new Path(s"$target/$r"), meta)
         }
       }, guardSource = true)

@@ -76,6 +76,22 @@ class PrunedReadSpec extends SparkSuite {
     assert(repo.count() == 10000)
   }
 
+  test("unpinned repo with drifting file schemas: the pruned read keeps getFullDf's columns") {
+    import spark.implicits._
+    // foreign data: two appends with different columns, no schema sidecar
+    val root = scratch("pruned-read-unpinned")
+    Seq((1L, "a1"), (2L, "a2")).toDF("k", "a").write.mode("append").parquet(s"$root/data")
+    Seq((3L, "b3"), (4L, "b4")).toDF("k", "b").write.mode("append").parquet(s"$root/data")
+    val repo = new TableRepo(root, spark)
+    assert(repo.pinnedSchema.isEmpty)
+    val full = repo.getFullDf
+    val got = repo.readWhereIn(Seq(1L, 3L).toDF("k"), "k")
+    assert(got.columns.sorted.toSeq == full.columns.sorted.toSeq,
+      s"pruned read columns ${got.columns.toSeq} vs getFullDf ${full.columns.toSeq}")
+    assertSameRows(got.select(full.columns.map(col).toIndexedSeq: _*),
+      full.filter(col("k").isin(1L, 3L)))
+  }
+
   test("NaN needles disable pruning rather than miss rows") {
     import spark.implicits._
     val df = Seq((1L, 1.0), (2L, Double.NaN), (3L, 9.5)).toDF("id", "x")
